@@ -92,8 +92,13 @@ object Engine {
       }))
   }
 
-  def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+  /** Task threads and shuffle partitions: `SPARK_GRAFT_CPUS` when set,
+    * else the cores this JVM sees. */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  def session(master: String = s"local[$cpus]",
+              shufflePartitions: Int = cpus.toInt)
       : SparkSession = {
     val spark = SparkSession.builder()
       .master(master)

@@ -28,7 +28,7 @@ object ScalingSpot {
       spark.sparkContext.setJobDescription(s"scaling_spot $n")
       n -> (1 to 2).map(_ => run(dir, n)).min
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = spark.sparkContext.defaultParallelism
     println(s"""{"metric": "scaling_spot", "dir": "$dir", "cpus": $cpus, """ +
       s""""queries": {${results.map { case (n, s) =>
         s""""$n": ${f"$s%.3f"}""" }.mkString(", ")}}}""")

@@ -111,9 +111,6 @@ object Hnsw {
       1.0 - d / (norms(i) * qn)
     }
 
-    def cosTo(i: Int, q: Array[Double], qn: Double): Double =
-      1.0 - dist(i, q, qn)
-
     /** Greedy descent at one level: walk to the closest neighbor until
       * no improvement. Deterministic — neighbor lists have a fixed
       * order and strict improvement is required to move. The distance

@@ -56,11 +56,8 @@ object Hashing {
   def hash48Sql(seed: Int, expr: String): String =
     hash48Sql(s"'$seed:' || $expr")
 
-  /** 24-bit hash → LONG, for hyperplane components (smaller range so the
-    * normalized double keeps full precision). */
-  def hash24(c: Column): Column =
-    conv(substring(md5(c), 1, 6), 16, 10).cast("long")
-
+  /** DuckDB SQL 24-bit hash → LONG, for hyperplane components (smaller
+    * range so the normalized double keeps full precision). */
   def hash24Sql(expr: String): String =
     s"('0x' || substr(md5($expr), 1, 6))::BIGINT"
 

@@ -20,7 +20,7 @@ object Binning {
     *
     * r10: nations are a FIXED dimension, so a plain partitioned ntile
     * window put each nation's whole customer set in one task at scale
-    * (Round10WindowAuditSpec's 10×-step measurement). The bucket is
+    * (RegistryScaleAuditSpec's 10×-step measurement). The bucket is
     * now computed from a BANDED row_number (q7 pattern, banding on
     * exact balance cents) + Spark's exact NTile arithmetic — with
     * N = n div b sized buckets and the first N mod b buckets one row

@@ -122,7 +122,7 @@ object DdSketch {
     // smallest value whose per-(g, value) cumulative count reaches
     // rank ⌈p·n⌉ — identical to the rank-ordered value, ties
     // collapsed; the cells window partition is bounded by the
-    // distinct-value range, not the row count (Round10WindowAuditSpec
+    // distinct-value range, not the row count (RegistryScaleAuditSpec
     // adjudication)
     val cells = rows.groupBy("g", "x").agg(count(lit(1)).as("c"))
     val wCum = Window.partitionBy(col("g")).orderBy(col("x"))

@@ -58,7 +58,7 @@ object FunnelTime {
     // exact order statistics over second-granular gap cells. r10: gap
     // cells are NOT value-range-bounded in any useful sense (whole
     // seconds over a multi-year span ≈ 10⁸ possible cells, and pairs
-    // are a ≤|steps| dimension — Round10WindowAuditSpec measured the
+    // are a ≤|steps| dimension — RegistryScaleAuditSpec measured the
     // per-pair cell partition growing linearly), so the cumulative is
     // a BANDED prefix sum and the totals a broadcast dimension join
     val cells = gaps.groupBy("pair", "gap_s")

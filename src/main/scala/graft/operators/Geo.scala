@@ -100,11 +100,6 @@ object Geo {
         array_min(xs) < array_max(xs) && array_min(ys) < array_max(ys)
     }).otherwise(lit(false))
 
-  /** Inclusive point-in-bbox test against a [[bbox]] struct. */
-  def containsPoint(bb: Column, x: Column, y: Column): Column =
-    x >= bb.getField("xmin") && x <= bb.getField("xmax") &&
-      y >= bb.getField("ymin") && y <= bb.getField("ymax")
-
   // ---- spatial join ----
 
   /** Default grid cell edge for the testdata's ~13-unit districts. */

@@ -75,7 +75,7 @@ object Graph {
     // NOTE (r18): the labelProp-style "summed UNION static no-in-edge
     // base" rewrite was tried here and MEASURED no better at EITHER
     // scale — close bench q65 4.6 -> 5.9 s at sf0.1, and the
-    // interleaved x10 A/B (ProbeMain pr_shape_x10, 210k nodes) read
+    // interleaved x10 A/B (OPTIMIZATION_r18.md, 210k nodes) read
     // join 8.46s vs union 9.24s mean at 32 cores (ties at 8) — the
     // rounds are already lazy and single-consumer, the per-round nodes
     // join broadcasts or reuses the aggregate exchange, and the

@@ -28,7 +28,7 @@ import graft.textstats.Curation
   *      banded prefix sum so no window task exceeds the band width
   *      even with few shards.
   *
-  * Plan invariants (Round10PipelineSpec asserts them): `documents` is
+  * Plan invariants (CurationPipelineSpec asserts them): `documents` is
   * scanned exactly ONCE; after the checkpoint there is no shuffled
   * join; every post-checkpoint window partitions on the band.
   *

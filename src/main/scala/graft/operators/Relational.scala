@@ -133,7 +133,7 @@ object Relational {
     * ([[BandedCumsum.rowNumber]]) — nations are a FIXED dimension, so
     * the plain per-nation window put every nation's whole customer set
     * in ONE window task at scale (the q137 failure mode, caught by
-    * Round10WindowAuditSpec's 10×-step measurement). idx bands on the
+    * RegistryScaleAuditSpec's 10×-step measurement). idx bands on the
     * integral key; bal_rank's order (balance DESC, key) is tie-free,
     * where rank() ≡ row_number(), banding on negated exact cents.
     */

@@ -12,8 +12,8 @@ object GraftSql {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** DataFrame over an already-analyzed logical plan — the window
-    * audit (Round10WindowAuditSpec) uses this to MEASURE each Window
+  /** DataFrame over an already-analyzed logical plan — the registry
+    * scale audit (RegistryScaleAuditSpec) uses this to MEASURE each Window
     * operator's child cardinality and partition sizes instead of
     * eyeballing plan strings. Classic-runtime bridge, test-side only. */
   def ofRows(spark: SparkSession,

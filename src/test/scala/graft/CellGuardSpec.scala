@@ -7,7 +7,7 @@ import operators.{CellGuard, Lorenz, Monitor, Psi, WeightedQuantile, Winsorize}
 /** r10: the value-cell family's CellGuard (loud failure on continuous
   * value columns, no behavior change within bound) and Psi's
   * empty-baseline sentinel (r9 advice). */
-class Round10GuardSpec extends AnyFunSuite {
+class CellGuardSpec extends AnyFunSuite {
   lazy val spark = Engine.session()
   import spark.implicits._
 

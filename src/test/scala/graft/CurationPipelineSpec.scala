@@ -10,7 +10,7 @@ import textstats.Curation
 /** q142 flagship pipeline: component parity (the pipeline must equal
   * the composition of its registered parts) and the persisted-frame
   * plan invariants the r9 verdict asked it to demonstrate. */
-class Round10PipelineSpec extends AnyFunSuite {
+class CurationPipelineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session()
   val dir = "/root/testdata/sf0.001"
 

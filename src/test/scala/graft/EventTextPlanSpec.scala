@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan audits for the round-7 operators: the scale-shape claims each
   * scaladoc makes, asserted against the actual executed plan. */
-class Round7PlanSpec extends AnyFunSuite {
+class EventTextPlanSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session()
   val dir = "/root/testdata/sf0.001"
 

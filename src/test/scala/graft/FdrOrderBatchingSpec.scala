@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-16 widening rows: BY beside BH (q329), the pipeline
   * order-sensitivity audit (q330), and the batching waste curve
   * (q331). */
-class Round16WideningSpec extends AnyFunSuite {
+class FdrOrderBatchingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session()
   val dir = "/root/testdata/sf0.001"
 

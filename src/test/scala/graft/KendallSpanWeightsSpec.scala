@@ -7,7 +7,7 @@ import operators.{Bootstrap, MannKendall}
 /** r11 guards (r10 verdict #1/#3 + advice): MannKendall's C(n,2)
   * calendar-span precondition made loud, and Bootstrap.weightsOf's
   * digest-reuse fast path pinned to the per-b reference rule. */
-class Round11GuardSpec extends AnyFunSuite {
+class KendallSpanWeightsSpec extends AnyFunSuite {
   lazy val spark = Engine.session()
   import spark.implicits._
 

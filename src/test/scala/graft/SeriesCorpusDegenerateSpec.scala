@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DegenerateInputSpec contract extended: empty frames, single rows,
   * constant columns must yield empty/NULL results by construction,
   * never an ANSI runtime error. */
-class Round9DegenerateSpec extends AnyFunSuite {
+class SeriesCorpusDegenerateSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session()
   import spark.implicits._
 

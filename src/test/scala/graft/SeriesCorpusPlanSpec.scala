@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Plan-shape assertions for the round-9 operators: the scale claims
   * their scaladocs make, checked against the plans Spark actually
   * builds. */
-class Round9PlanSpec extends AnyFunSuite {
+class SeriesCorpusPlanSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session()
   val dir = "/root/testdata/sf0.001"
 

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Plan-shape assertions for the round-8 operators: the scale claims
   * their scaladocs make, checked against the plans Spark actually
   * builds. */
-class Round8PlanSpec extends AnyFunSuite {
+class StatsPlanSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session()
   val dir = "/root/testdata/sf0.001"
 
