@@ -75,7 +75,7 @@ object HodgesLehmann {
         "CAST(cx AS DECIMAL(38,0)) * cy AS w")
       .groupBy("g", "d")
       .agg(expr("CAST(sum(w) AS DECIMAL(38,0))").as("w"))
-    broadcast(sides).join(election(cells), Seq("g"), "left")
+    sides.join(election(cells), Seq("g"), "left")
       .selectExpr("g", "n_x", "n_y",
         "CASE WHEN n_x > 0 AND n_y > 0 THEN" +
           " round((CAST(d_lo AS DOUBLE) + CAST(d_hi AS DOUBLE)) / 2.0, 1)" +

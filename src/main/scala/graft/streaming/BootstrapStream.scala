@@ -91,31 +91,20 @@ object BootstrapStream {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    LateStream.withShuffle4(spark) {
+    Replay.withShuffle4(spark) {
       val feed = Replay.knuthSorted(graft.Tables.customer(spark, dir)
         .filter(col("c_mktsegment").isNotNull && col("c_acctbal").isNotNull)
         .selectExpr("c_mktsegment AS g", "c_custkey AS k",
           "CAST(floor(c_acctbal * 1e2) AS BIGINT) AS xc")
         .as[CiEvent].collect())(
         e => e.k * 2654435761L % 1000003) // the q259 scramble
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q342_ci_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CiEvent]
-      val q = bootstrapCiStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      val finals: Seq[(String, Long, Long, Double, Double, Double)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          spark.table(name).collect()
-            .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-              r.getDouble(3), r.getDouble(4), r.getDouble(5)))
-            .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val finals = Replay.run(spark, "q342_ci", "update",
+          Replay.thirds(feed))(bootstrapCiStream(_)) {
+        _.collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+            r.getDouble(3), r.getDouble(4), r.getDouble(5)))
+          .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq
+      }
       finals.toDF("c_mktsegment", "n_rows", "n_resamples", "mean",
         "ci_lo", "ci_hi")
     }

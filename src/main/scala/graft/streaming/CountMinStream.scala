@@ -81,10 +81,7 @@ object CountMinStream {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val nParts = 16
       val lines = graft.Tables.lineitem(spark, dir)
         .selectExpr("CAST(l_partkey AS STRING) AS t", "l_partkey AS k")
@@ -94,25 +91,15 @@ object CountMinStream {
           lit(nParts.toLong)).cast("int").as("part"), col("t"))
         .as[TermEvent].collect())(
         r => r.t.toLong * 2654435761L % 1000003) // the q259 scramble
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q334_cms_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TermEvent]
-      val q = cmsStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      val finalCells: Seq[(Int, Int, Long)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          spark.table(name).collect()
-            .groupBy(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
-            .map { case ((_, di, b), vs) =>
-              // compact: totals are monotone per partition cell
-              (di, b, vs.map(_.getLong(3)).max)
-            }.toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val finalCells = Replay.run(spark, "q334_cms", "update",
+          Replay.thirds(feed))(cmsStream(_)) {
+        _.collect()
+          .groupBy(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
+          .map { case ((_, di, b), vs) =>
+            // compact: totals are monotone per partition cell
+            (di, b, vs.map(_.getLong(3)).max)
+          }.toSeq
+      }
       // global table = per-(di, b) sum across routing partitions
       val tbl = finalCells.toDF("di", "b", "part_tot")
         .groupBy("di", "b")
@@ -125,7 +112,7 @@ object CountMinStream {
       top.join(graft.operators.CountMin.estimates(top.select("t"), tbl), "t")
         .selectExpr("k AS l_partkey", "c AS n_exact",
           "cms_est AS cms_estimate", "cms_est - c AS overestimate")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayCms]]: q246's own oracle verbatim. */

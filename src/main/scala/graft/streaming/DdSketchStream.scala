@@ -96,10 +96,7 @@ object DdSketchStream {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val rows = graft.Tables.orders(spark, dir)
         .select(col("o_orderpriority").as("g"), col("o_totalprice").as("x"),
           col("o_orderkey").as("k"))
@@ -109,26 +106,12 @@ object DdSketchStream {
           .as[(String, Double, Long)].collect())(
         r => r._3 * 2654435761L % 1000003) // the q259 scramble
         .map { case (g, x, _) => ValueEvent(g, x) }
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q335_dds_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ValueEvent]
-      val q = ddSketchStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      val finals: Seq[(String, Double, Long, Double)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          spark.table(name).collect().zipWithIndex
-            .groupBy(r => (r._1.getString(0), r._1.getDouble(1)))
-            .map { case ((g, p), vs) =>
-              val r = vs.maxBy(_._2)._1
-              (g, p, r.getLong(r.fieldIndex("n")),
-                r.getDouble(r.fieldIndex("est")))
-            }.toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val finals = Replay.run(spark, "q335_dds", "update",
+          Replay.thirds(feed))(ddSketchStream(_)) { sink =>
+        Replay.latestBy(sink.collect())(r => (r.getString(0), r.getDouble(1)))
+          .map(r => (r.getString(0), r.getDouble(1),
+            r.getLong(r.fieldIndex("n")), r.getDouble(r.fieldIndex("est"))))
+      }
       val est = finals.toDF("g", "p", "n", "est")
       // exact type-1 quantile over value cells — the q260 program
       val cells = rows.groupBy("g", "x").agg(count(lit(1)).as("c"))
@@ -148,7 +131,7 @@ object DdSketchStream {
           col("exact"),
           (round((col("est") - col("exact")) / col("exact"), 6) + 0.0)
             .as("rel_err"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayDdSketch]]: q260's own oracle verbatim. */

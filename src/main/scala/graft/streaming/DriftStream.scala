@@ -304,8 +304,7 @@ object DriftStream {
   def replayKsDrift(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    LateStream.withShuffle4(spark) {
+    Replay.withShuffle4(spark) {
       val cents = floor(col("value") * 100.0).cast("double")
       val ev = graft.Tables.events(spark, dir)
         .filter(col("value").isNotNull)
@@ -325,34 +324,23 @@ object DriftStream {
         LateStream.boundedScramble[DriftEvent](feed, _.ts.getTime, 4, 8, 17)
       val maxTs = feed.map(_.ts.getTime).max
       val lastRealWs = maxTs / KsDriftWindowMs * KsDriftWindowMs
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q345_ksdrift_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[DriftEvent]
-      val q = ksDriftStream(input.toDF(), baseline, KsDriftWindowMs,
-          s"$delayMs milliseconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val alerts: Seq[(Long, Long, Double, Double)] =
-        try {
-          batches.foreach { b => input.addData(b); q.processAllAvailable() }
-          // + 2 windows: guarantees (a) the sentinels land OUTSIDE every
-          // real window regardless of how small delayMs is (they carry a
-          // real v=0.0 cell, so landing inside lastRealWs would corrupt
-          // its KS row), and (b) the post-sentinel watermark (= flushTs)
-          // clears the last real window END even when delayMs < window
-          val flushTs = maxTs + 4 * delayMs + 2 * KsDriftWindowMs
-          for (i <- 0 to 1) {
-            input.addData(Seq(DriftEvent(
-              new Timestamp(flushTs + i * delayMs), 0.0)))
-            q.processAllAvailable()
-          }
-          spark.table(name).collect()
-            .map(r => (r.getTimestamp(0).getTime, r.getLong(1),
-              r.getDouble(2), r.getDouble(3)))
-            .filter(_._1 <= lastRealWs) // drop the sentinel windows
-            .toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      // + 2 windows: guarantees (a) the sentinels land OUTSIDE every
+      // real window regardless of how small delayMs is (they carry a
+      // real v=0.0 cell, so landing inside lastRealWs would corrupt
+      // its KS row), and (b) the post-sentinel watermark (= flushTs)
+      // clears the last real window END even when delayMs < window
+      val flushTs = maxTs + 4 * delayMs + 2 * KsDriftWindowMs
+      val alerts = Replay.run(spark, "q345_ksdrift", "append",
+          Replay.withSentinels(batches, (0 to 1).map(i =>
+            DriftEvent(new Timestamp(flushTs + i * delayMs), 0.0)): _*))(
+          ds => ksDriftStream(ds.toDF(), baseline, KsDriftWindowMs,
+            s"$delayMs milliseconds")) {
+        _.collect()
+          .map(r => (r.getTimestamp(0).getTime, r.getLong(1),
+            r.getDouble(2), r.getDouble(3)))
+          .filter(_._1 <= lastRealWs) // drop the sentinel windows
+          .toSeq
+      }
       alerts.toDF("ws_ms", "n_window", "d_stat", "ks_z")
     }
   }

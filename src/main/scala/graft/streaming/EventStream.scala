@@ -516,10 +516,7 @@ object EventStream {
     * 100 TB path. */
   def replaySessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val feed = graft.Tables.events(spark, dir)
         .select(col("ts"), col("user_id").cast("long"),
           col("event_type"), col("value").cast("double"))
@@ -529,28 +526,15 @@ object EventStream {
       val gapMs = 30 * 60 * 1000L
       val sentinel1 = Event(new Timestamp(maxTs + gapMs + 20 * 60000L), -1L, "sentinel", 0.0)
       val sentinel2 = Event(new Timestamp(maxTs + gapMs + 80 * 60000L), -1L, "sentinel", 0.0)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q314_sess_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-      val q = sessionize(input.toDS(), gapMs = gapMs)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val rows: Seq[Session] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          input.addData(sentinel1); q.processAllAvailable()
-          input.addData(sentinel2); q.processAllAvailable()
-          spark.table(name).as[Session]
-            .filter(col("user_id") >= 0L).collect().toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val rows = Replay.run(spark, "q314_sess", "append",
+          Replay.withSentinels(Replay.thirds(feed.toSeq), sentinel1, sentinel2))(
+          sessionize(_, gapMs = gapMs))(
+          _.as[Session].filter(col("user_id") >= 0L).collect().toSeq)
       rows.toDS().toDF()
         .select(col("user_id"), col("session_start"), col("session_end"),
           col("n_events"),
           (round(col("sum_value"), 4) + 0.0).as("sum_value"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** q320 — the SCD-2 stream EXECUTED under the driver's full-hash
@@ -564,33 +548,19 @@ object EventStream {
     * running stream has not emitted YET). */
   def replayScd2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val feed = Replay.sortedByLongs(graft.Tables.events(spark, dir)
         .select(col("user_id").cast("long").as("key"),
           col("event_type").as("state"), col("ts"),
           col("event_id").cast("long").as("tie"))
         .as[ScdObs].collect())(r => tsMicros(r.ts), _.tie)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q320_scd2_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ScdObs]
-      val q = scd2Stream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val rows: Seq[ScdClosed] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          spark.table(name).as[ScdClosed].collect().toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val rows = Replay.run(spark, "q320_scd2", "append",
+          Replay.thirds(feed))(scd2Stream(_))(
+          _.as[ScdClosed].collect().toSeq)
       rows.toDS().toDF()
         .select(col("key").as("user_id"), col("state"),
           col("valid_from"), col("valid_to"), col("version"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayScd2]]: q66's statement filtered to closed
@@ -607,34 +577,20 @@ object EventStream {
     * q80's own SQL verbatim. */
   def replayLastTouch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val feed = Replay.sortedByLongs(graft.Tables.events(spark, dir)
         .select(col("user_id").cast("long"), col("ts"),
           col("event_id").cast("long"), col("event_type"), col("value"))
         .as[AttrEvent].collect())(r => tsMicros(r.ts), _.event_id)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q321_attr_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[AttrEvent]
-      val q = attributionStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val rows: Seq[AttrConv] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          spark.table(name).as[AttrConv].collect().toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val rows = Replay.run(spark, "q321_attr", "append",
+          Replay.thirds(feed))(attributionStream(_))(
+          _.as[AttrConv].collect().toSeq)
       rows.toDS().toDF()
         .groupBy(col("touch_type"))
         .agg(count(lit(1)).as("n_conversions"),
           (expr("sum(CAST(floor(coalesce(value, 0) * 10000) AS BIGINT))") / 10000.0)
             .as("revenue"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayLastTouch]]: q80's own oracle — replay ≡
@@ -652,10 +608,7 @@ object EventStream {
     * [[AsofPending]] — the third instance of the q314 precision class. */
   def replayAsof(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val ev = graft.Tables.events(spark, dir)
       val left = ev.filter(col("event_type").isin("click", "view", "purchase"))
         .select(col("event_id").cast("long"), col("user_id").cast("long"),
@@ -675,35 +628,22 @@ object EventStream {
       val feed = Replay.sortedByLongs(rights ++ lefts)(
         e => tsMicros(e.ts), _.side.toLong, _.event_id)
       val maxTs = feed.map(e => tsMicros(e.ts)).max / 1000L
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q326_asof_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[AsofEvent]
       // TTL > the table's whole span: the batch twin joins states of
       // ANY age, so the replay must not let the bounded-state knob
       // evict an idle user's state mid-table (the TTL contract itself
       // is pinned separately in StreamingSpec)
-      val q = asofStream(input.toDS(), watermark = "10 minutes",
-          stateTtlMs = 365L * 86400000L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val rows: Seq[EnrichedEvent] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          input.addData(AsofEvent(-1L, new Timestamp(maxTs + 86400000L), 1, -1L, 0.0))
-          q.processAllAvailable()
-          input.addData(AsofEvent(-1L, new Timestamp(maxTs + 90000000L), 1, -2L, 0.0))
-          q.processAllAvailable()
-          spark.table(name).as[EnrichedEvent]
-            .filter(col("user_id") >= 0L).collect().toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val rows = Replay.run(spark, "q326_asof", "append",
+          Replay.withSentinels(Replay.thirds(feed),
+            AsofEvent(-1L, new Timestamp(maxTs + 86400000L), 1, -1L, 0.0),
+            AsofEvent(-1L, new Timestamp(maxTs + 90000000L), 1, -2L, 0.0)))(
+          asofStream(_, watermark = "10 minutes",
+            stateTtlMs = 365L * 86400000L))(
+          _.as[EnrichedEvent].filter(col("user_id") >= 0L).collect().toSeq)
       rows.toDS().toDF()
         .join(left.select(col("event_id"), col("event_type")), Seq("event_id"))
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
           col("value"), col("state_ts"), col("state_value"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayAsof]]: q35's own oracle. */
@@ -722,10 +662,7 @@ object EventStream {
     * Oracle = q19's own SQL. */
   def replayDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val docs = graft.Tables.documents(spark, dir)
       val feed = docs.select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)].collect().sortBy(_._1)
@@ -733,27 +670,17 @@ object EventStream {
         // with ts <= watermark is dropped as late — doc_id 0 at epoch 0
         // would silently vanish
         .map { case (id, text) => (new Timestamp(1700000000000L + id), id, text) }
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q327_dedup_$tag"
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Timestamp, Long, String)]
-      val q = dedupStream(input.toDF().toDF("ts", "doc_id", "text"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val survivors: Seq[(String, Long)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          spark.table(name).select(col("text_hash"), col("doc_id"))
-            .as[(String, Long)].collect().toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val survivors = Replay.run(spark, "q327_dedup", "append",
+          Replay.thirds(feed.toSeq))(
+          ds => dedupStream(ds.toDF("ts", "doc_id", "text")))(
+          _.select(col("text_hash"), col("doc_id"))
+            .as[(String, Long)].collect().toSeq)
       val counts = docs.select(md5(col("text")).as("text_hash"))
         .groupBy("text_hash").agg(count(lit(1)).as("n_copies"))
       survivors.toDF("text_hash", "canonical_id")
         .join(counts, Seq("text_hash"))
         .select(col("text_hash"), col("canonical_id"), col("n_copies"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayDedup]]: q19's own oracle. */
@@ -768,10 +695,7 @@ object EventStream {
     * (user_id, start_ts) aggregate. Oracle = q36's own SQL. */
   def replayRangeJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val ev = graft.Tables.events(spark, dir)
       val mRows = Replay.sortedByLongs(
         ev.filter(col("event_type").isin("click", "view", "purchase"))
@@ -782,39 +706,23 @@ object EventStream {
           .select(col("user_id").cast("long"), col("ts").as("start_ts"),
             (col("ts") + expr("INTERVAL 30 MINUTES")).as("end_ts"))
           .as[(Long, Timestamp, Timestamp)].collect())(r => tsMicros(r._2))
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q328_range_$tag"
-      val mIn = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Timestamp, Double)]
-      val iIn = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Timestamp, Timestamp)]
-      val measures = mIn.toDF().toDF("user_id", "ts", "value")
-        .withWatermark("ts", "1 hour")
-      val intervals = iIn.toDF().toDF("user_id", "start_ts", "end_ts")
-        .withWatermark("start_ts", "1 hour")
-      val q = rangeJoinStream(measures, intervals,
+      val pairs = Replay.interleaved(spark, "q328_range", "append",
+          Replay.thirds(mRows), Replay.thirds(iRows)) { (m, i) =>
+        rangeJoinStream(
+          m.toDF("user_id", "ts", "value").withWatermark("ts", "1 hour"),
+          i.toDF("user_id", "start_ts", "end_ts")
+            .withWatermark("start_ts", "1 hour"),
           Seq("user_id"), "ts", "start_ts", "end_ts", "30 minutes")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val pairs =
-        try {
-          val mChunks = mRows.grouped(math.max(1, (mRows.length + 2) / 3)).toSeq
-          val iChunks = iRows.grouped(math.max(1, (iRows.length + 2) / 3)).toSeq
-          (0 until math.max(mChunks.length, iChunks.length)).foreach { k =>
-            if (k < mChunks.length) mIn.addData(mChunks(k).toSeq)
-            if (k < iChunks.length) iIn.addData(iChunks(k).toSeq)
-            q.processAllAvailable()
-          }
-          spark.table(name)
-            .select(col("user_id"), col("start_ts"), col("value"))
-            .collect().toSeq
-            .map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2)))
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      } {
+        _.select(col("user_id"), col("start_ts"), col("value"))
+          .collect().toSeq
+          .map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2)))
+      }
       pairs.toDF("user_id", "start_ts", "value")
         .groupBy(col("user_id"), col("start_ts"))
         .agg(count(lit(1)).as("n_events"),
           (round(sum(col("value")), 4) + 0.0).as("sum_value"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayRangeJoin]]: q36's own oracle. */

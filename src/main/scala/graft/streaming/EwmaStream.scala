@@ -93,8 +93,7 @@ object EwmaStream {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    LateStream.withShuffle4(spark) {
+    Replay.withShuffle4(spark) {
       val feed = Replay.sortedByLongs(graft.Tables.events(spark, dir)
         .select(expr("unix_micros(ts)").as("tsUs"),
           col("user_id").as("user"), col("event_id").as("seq"),
@@ -102,25 +101,13 @@ object EwmaStream {
           // or a NULL value crashes the non-nullable encoder field
           coalesce(col("value"), lit(0.0)).as("v"))
         .as[EwmaEvent].collect())(_.tsUs, _.seq)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q340_ewma_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EwmaEvent]
-      val q = ewmaStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val finals: Seq[(Long, Long, Double, Double)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          input.addData(feed.take(feed.length / 3).toSeq) // dup redelivery
-          q.processAllAvailable()
-          spark.table(name).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-              r.getDouble(3)))
-            .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val finals = Replay.run(spark, "q340_ewma", "append",
+          Replay.thirdsRedelivered(feed))(ewmaStream(_)) {
+        _.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+            r.getDouble(3)))
+          .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq
+      }
       finals.toDF("user_id", "n_events", "last_value", "ewma")
     }
   }

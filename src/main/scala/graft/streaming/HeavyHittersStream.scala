@@ -104,10 +104,7 @@ object HeavyHittersStream {
   def replayGuaranteed(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val toks = graft.Tables.documents(spark, dir)
         .select(col("doc_id"), posexplode(split(col("text"), " ")))
         .select(col("doc_id"), col("pos"),
@@ -118,33 +115,23 @@ object HeavyHittersStream {
       // the guarantee (and thus the oracle) holds for ANY order
       val feed = toks.orderBy(col("doc_id"), col("pos"))
         .select(col("part"), col("term")).as[TokRow].collect()
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q315_mg_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TokRow]
-      val q = heavyHitters(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      val survivors: Set[(Int, String)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          // final summary per group = the max-epoch emission for that
-          // part. A term decremented OUT of the summary in a later
-          // epoch must NOT survive — keys from earlier epochs would
-          // mask an MG implementation that loses a guaranteed-heavy
-          // term mid-stream (the r16 advice finding).
-          val rows = spark.table(name).collect()
-            .map(r => (r.getInt(0), r.getString(1),
-              r.getLong(r.fieldIndex("epoch"))))
-          val lastEpoch = rows.groupBy(_._1).map { case (p, vs) =>
-            (p, vs.map(_._3).max)
-          }
-          rows.iterator
-            .filter { case (p, _, e) => e == lastEpoch(p) }
-            .map { case (p, t, _) => (p, t) }.toSet
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val survivors = Replay.run(spark, "q315_mg", "update",
+          Replay.thirds(feed.toSeq))(heavyHitters(_)) { sink =>
+        // final summary per group = the max-epoch emission for that
+        // part. A term decremented OUT of the summary in a later
+        // epoch must NOT survive — keys from earlier epochs would
+        // mask an MG implementation that loses a guaranteed-heavy
+        // term mid-stream (the r16 advice finding).
+        val rows = sink.collect()
+          .map(r => (r.getInt(0), r.getString(1),
+            r.getLong(r.fieldIndex("epoch"))))
+        val lastEpoch = rows.groupBy(_._1).map { case (p, vs) =>
+          (p, vs.map(_._3).max)
+        }
+        rows.iterator
+          .filter { case (p, _, e) => e == lastEpoch(p) }
+          .map { case (p, t, _) => (p, t) }.toSet
+      }
       val exact = toks.groupBy(col("part"), col("term"))
         .agg(count(lit(1)).cast("long").as("n"))
       val totals = toks.groupBy(col("part"))
@@ -154,7 +141,7 @@ object HeavyHittersStream {
         .filter(col("n") * (Capacity + 1) > col("n_part"))
         .join(broadcast(surv), Seq("part", "term"), "left_semi")
         .select(col("part"), col("term"), col("n"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayGuaranteed]]: the exact guaranteed-heavy

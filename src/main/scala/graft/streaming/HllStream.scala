@@ -86,43 +86,24 @@ object HllStream {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val keyed = graft.Tables.lineitem(spark, dir)
         .selectExpr("l_returnflag AS g", "CAST(l_orderkey AS STRING) AS k")
         .localCheckpoint(true) // feed + exact audit share the scan
       val feed = Replay.knuthSorted(keyed.as[KeyEvent].collect())(
         r => r.k.toLong * 2654435761L % 1000003) // the q259 scramble
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q332_hll_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[KeyEvent]
-      val q = hllStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      val finals: Seq[(String, Double)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          input.addData(feed.take(feed.length / 3).toSeq) // dup redelivery
-          q.processAllAvailable()
-          spark.table(name).collect().zipWithIndex
-            .groupBy(_._1.getString(0))
-            .map { case (g, vs) =>
-              val r = vs.maxBy(_._2)._1
-              (g, r.getDouble(r.fieldIndex("hll_est")))
-            }.toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val finals = Replay.run(spark, "q332_hll", "update",
+          Replay.thirdsRedelivered(feed))(hllStream(_)) { sink =>
+        Replay.latestBy(sink.collect())(_.getString(0))
+          .map(r => (r.getString(0), r.getDouble(r.fieldIndex("hll_est"))))
+      }
       val exact = keyed.groupBy("g")
         .agg(expr("CAST(count(DISTINCT k) AS BIGINT)").as("n_exact"))
       finals.toDF("g", "hll_est").join(exact, "g")
         .selectExpr("g AS l_returnflag", "n_exact",
           "round(hll_est, 4) + 0.0 AS hll_estimate",
           "round((hll_est - n_exact) / n_exact, 6) + 0.0 AS rel_err")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayHll]]: q245's own oracle verbatim. */

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -102,42 +101,22 @@ object JoinStream {
     * path, and the hash gate pins the join it produces. */
   def replayAttribution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // state-store tasks = shuffle partitions at query start; ~6 micro-
-    // batches over join state of a few hundred rows makes 32 state
-    // partitions pure per-batch overhead (the q259 adjudication).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val events = Tables.events(spark, dir)
       val impRows = Replay.sortedByLongs(
         impressionsOf(events).as[Imp].collect())(_.ts.getTime, _.event_id)
       val convRows = Replay.sortedByLongs(
         conversionsOf(events).as[Conv].collect())(_.cts.getTime, _.conv_id)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q311_ssjoin_$tag"
-      val iIn = MemoryStream[Imp]; val cIn = MemoryStream[Conv]
-      val q = attributionJoin(iIn.toDF(), cIn.toDF())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val rows: Seq[Attributed] =
-        try {
-          val iChunks = impRows.grouped(math.max(1, (impRows.length + 2) / 3)).toSeq
-          val cChunks = convRows.grouped(math.max(1, (convRows.length + 2) / 3)).toSeq
-          (0 until math.max(iChunks.length, cChunks.length)).foreach { k =>
-            if (k < iChunks.length) iIn.addData(iChunks(k).toSeq)
-            if (k < cChunks.length) cIn.addData(cChunks(k).toSeq)
-            q.processAllAvailable()
-          }
-          // materialize BEFORE dropping the sink view
-          spark.table(name)
-            .filter(col("conv_id") =!= col("event_id")) // self-pair rule
-            .as[Attributed].collect().toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val rows = Replay.interleaved(spark, "q311_ssjoin", "append",
+          Replay.thirds(impRows), Replay.thirds(convRows))(
+          (i, c) => attributionJoin(i.toDF(), c.toDF())) {
+        _.filter(col("conv_id") =!= col("event_id")) // self-pair rule
+          .as[Attributed].collect().toSeq
+      }
       rows.toDS().toDF()
         .select(col("user_id"), col("event_id"), col("conv_id"),
           col("value"), col("ts"), col("cts"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayAttribution]]: the batch form of the SAME

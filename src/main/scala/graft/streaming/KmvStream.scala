@@ -85,38 +85,19 @@ object KmvStream {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val keyed = graft.Tables.lineitem(spark, dir)
         .selectExpr("l_returnflag AS g", "CAST(l_orderkey AS STRING) AS k")
         .withColumn("h", graft.functions.Hashing.hash48(col("k")))
         .localCheckpoint(true) // feed + audits share the scan+hash
       val feed = Replay.knuthSorted(keyed.select("g", "k").as[KeyEvent].collect())(
         r => r.k.toLong * 2654435761L % 1000003) // the q259 scramble
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q333_kmv_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[KeyEvent]
-      val q = kmvStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      val finals: Seq[(String, Long, Long, Seq[Long])] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          input.addData(feed.take(feed.length / 3).toSeq) // dup redelivery
-          q.processAllAvailable()
-          spark.table(name).collect().zipWithIndex
-            .groupBy(_._1.getString(0))
-            .map { case (g, vs) =>
-              val r = vs.maxBy(_._2)._1
-              (g, r.getLong(r.fieldIndex("sz")), r.getLong(r.fieldIndex("hk")),
-                r.getSeq[Long](r.fieldIndex("hs")))
-            }.toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val finals = Replay.run(spark, "q333_kmv", "update",
+          Replay.thirdsRedelivered(feed))(kmvStream(_)) { sink =>
+        Replay.latestBy(sink.collect())(_.getString(0))
+          .map(r => (r.getString(0), r.getLong(r.fieldIndex("sz")),
+            r.getLong(r.fieldIndex("hk")), r.getSeq[Long](r.fieldIndex("hs"))))
+      }
       val sk = finals.toDF("g", "sz", "hk", "hs").localCheckpoint(true)
       val exact = keyed.groupBy("g")
         .agg(expr("CAST(count(1) AS BIGINT)").as("n_lines"),
@@ -137,7 +118,7 @@ object KmvStream {
             " AS lines_mean_exact",
           "round(CAST(s_lines AS DOUBLE) / CAST(s_orders AS DOUBLE), 6) + 0.0" +
             " AS lines_mean_kmv")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayKmv]]: q264's own oracle verbatim. */

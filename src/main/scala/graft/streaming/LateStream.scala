@@ -223,38 +223,14 @@ object LateStream {
     (batches.map(b => rnd.shuffle(b)).toSeq, spanMs)
   }
 
-  /** Run a late-tolerant stream over scrambled batches, flush the
-    * watermark with two sentinel rows, and return the sink rows in
-    * emission order. `mkSentinel(i, flushTs)` must produce a row on a
-    * throwaway key the caller filters back out. */
-  private def runScrambled[E: org.apache.spark.sql.Encoder](
-      spark: SparkSession, name: String, batches: Seq[Seq[E]],
-      delayMs: Long, maxTs: Long, mkSentinel: (Int, Long) => E)(
-      start: Dataset[E] =>
-        org.apache.spark.sql.streaming.DataStreamWriter[_]): Seq[org.apache.spark.sql.Row] = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[E]
-    val q = start(input.toDS())
-      .format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => input.addData(b); q.processAllAvailable() }
-      val flushTs = maxTs + 4 * delayMs
-      for (i <- 0 to 1) {
-        input.addData(Seq(mkSentinel(i, flushTs + i * delayMs)))
-        q.processAllAvailable()
-      }
-      spark.table(name).collect().toSeq
-    } finally { q.stop(); spark.catalog.dropTempView(name) }
-  }
-
-  /** `private[streaming]`: every replay harness in the package runs
-    * its tiny feed at 4 shuffle partitions and must restore the
-    * session setting — one maintained wrapper, not six copies. */
-  private[streaming] def withShuffle4[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  /** `batches` then the two watermark-flush sentinels: `mkSentinel(i,
+    * ts)` must produce a row on a throwaway key the caller's read
+    * filters back out. */
+  private def flushed[E](batches: Seq[Seq[E]], delayMs: Long, maxTs: Long)(
+      mkSentinel: (Int, Long) => E): Seq[Seq[E]] = {
+    val flushTs = maxTs + 4 * delayMs
+    Replay.withSentinels(batches,
+      (0 to 1).map(i => mkSentinel(i, flushTs + i * delayMs)): _*)
   }
 
   /** q336 — the watermark-buffered CUSUM EXECUTED under the driver's
@@ -269,7 +245,7 @@ object LateStream {
   def replayCusumLate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    withShuffle4(spark) {
+    Replay.withShuffle4(spark) {
       val (t, k, h) = (graft.operators.Changepoint.Target,
         graft.operators.Changepoint.K, graft.operators.Changepoint.H)
       val feed = Replay.sortedByLongs(graft.Tables.events(spark, dir)
@@ -280,13 +256,11 @@ object LateStream {
           r.getDouble(3))))(_.ts.getTime, _.seq)
       val (batches, delayMs) =
         boundedScramble[CusumEvent](feed, _.ts.getTime, 4, 8, 7)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val rows = runScrambled[CusumEvent](spark, s"q336_cusum_$tag",
-        batches, delayMs, feed.map(_.ts.getTime).max,
-        (i, ts) => CusumEvent(new Timestamp(ts), "__flush", i.toLong, 0.0)) {
-        ds => cusumStreamLateRows(ds, t, k, h, s"$delayMs milliseconds")
-          .writeStream.outputMode("append")
-      }
+      val rows = Replay.run(spark, "q336_cusum", "append",
+          flushed(batches, delayMs, feed.map(_.ts.getTime).max)(
+            (i, ts) => CusumEvent(new Timestamp(ts), "__flush", i.toLong, 0.0)))(
+          cusumStreamLateRows(_, t, k, h, s"$delayMs milliseconds"))(
+          _.collect().toSeq)
       rows.map(r => (r.getString(0), r.getTimestamp(1), r.getLong(3),
           r.getLong(4), Option(r.getString(5))))
         .toDF("g", "ts", "s_up", "s_dn", "dir")
@@ -316,7 +290,7 @@ object LateStream {
   def replayTwapLate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    withShuffle4(spark) {
+    Replay.withShuffle4(spark) {
       val feed = Replay.sortedByLongs(graft.Tables.events(spark, dir)
         .filter(col("value").isNotNull)
         .selectExpr("user_id", "ts", "unix_micros(ts) AS us", "event_id",
@@ -326,22 +300,16 @@ object LateStream {
           r.getLong(3), r.getDouble(4))))(_.us, _.tie)
       val (batches, delayMs) =
         boundedScramble[TwapLateEvent](feed, _.ts.getTime, 4, 8, 11)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val rows = runScrambled[TwapLateEvent](spark, s"q337_twap_$tag",
-        batches, delayMs, feed.map(_.ts.getTime).max,
-        (i, ts) => TwapLateEvent(-1L, new Timestamp(ts), ts * 1000L,
-          i.toLong, 0.0)) {
-        ds => twapStreamLate(ds, s"$delayMs milliseconds")
-          .writeStream.outputMode("update")
-      }
-      rows.zipWithIndex
-        .filter(_._1.getLong(0) >= 0L)
-        .groupBy(_._1.getLong(0))
-        .map { case (_, vs) =>
-          val r = vs.maxBy(_._2)._1 // final Update emission per user
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
-            if (r.isNullAt(4)) None else Some(r.getDouble(4)))
-        }.toSeq
+      // final Update emission per user
+      val rows = Replay.run(spark, "q337_twap", "update",
+          flushed(batches, delayMs, feed.map(_.ts.getTime).max)(
+            (i, ts) => TwapLateEvent(-1L, new Timestamp(ts), ts * 1000L,
+              i.toLong, 0.0)))(
+          twapStreamLate(_, s"$delayMs milliseconds"))(
+          sink => Replay.latestBy(
+            sink.collect().filter(_.getLong(0) >= 0L))(_.getLong(0)))
+      rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
+          if (r.isNullAt(4)) None else Some(r.getDouble(4))))
         .toDF("user_id", "n_events", "n_intervals", "span_s", "twap")
     }
   }
@@ -357,7 +325,7 @@ object LateStream {
   def replayMkLate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    withShuffle4(spark) {
+    Replay.withShuffle4(spark) {
       val feed = graft.Tables.orders(spark, dir)
         .filter(col("o_orderdate").isNotNull && col("o_totalprice").isNotNull
           && col("o_orderpriority").isNotNull)
@@ -373,21 +341,16 @@ object LateStream {
         .toSeq.sortBy(_.day)
       val (batches, delayMs) =
         boundedScramble[TrendLateEvent](feed, _.ts.getTime, 4, 6, 13)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val rows = runScrambled[TrendLateEvent](spark, s"q338_mk_$tag",
-        batches, delayMs, feed.map(_.ts.getTime).max,
-        (i, ts) => TrendLateEvent("__flush", new Timestamp(ts), i.toLong, 0L)) {
-        ds => mkTrendStreamLate(ds, s"$delayMs milliseconds")
-          .writeStream.outputMode("update")
-      }
-      rows.zipWithIndex
-        .filter(_._1.getString(0) != "__flush")
-        .groupBy(_._1.getString(0))
-        .map { case (_, vs) =>
-          val r = vs.maxBy(_._2)._1 // final Update emission per series
-          (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getDouble(4), r.getString(5))
-        }.toSeq
+      // final Update emission per series
+      val rows = Replay.run(spark, "q338_mk", "update",
+          flushed(batches, delayMs, feed.map(_.ts.getTime).max)(
+            (i, ts) => TrendLateEvent("__flush", new Timestamp(ts), i.toLong,
+              0L)))(
+          mkTrendStreamLate(_, s"$delayMs milliseconds"))(
+          sink => Replay.latestBy(
+            sink.collect().filter(_.getString(0) != "__flush"))(_.getString(0)))
+      rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getDouble(4), r.getString(5)))
         .toDF("o_orderpriority", "n_days", "s_stat", "var18", "z", "trend")
     }
   }

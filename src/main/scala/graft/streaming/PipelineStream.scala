@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -92,68 +91,30 @@ object PipelineStream {
     * 100 TB path, and they are what the hash gate pins. */
   def replayEpoch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // state-store tasks = shuffle partitions AT QUERY START; the replay
-    // runs 7 micro-batches over 2 stateful queries whose state is a few
-    // HUNDRED rows, so 32 state partitions is pure per-batch overhead
-    // (measured 13.8 s → ~5 s at sf0.1 with 4). Restored in finally —
-    // this knob scopes to the harness, not the session.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try replayEpochImpl(spark, dir)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
-
-  private def replayEpochImpl(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val kept = Pipeline.keptFrame(Tables.documents(spark, dir))
-    val feed = Replay.knuthSorted(keyedKept(kept).collect())(
-      r => r.id * 2654435761L % 1000003)
-    val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-    val electName = s"q259_elect_$tag"
-    val input = MemoryStream[WeightedSampleStream.KeyedRow]
-    val eq = electionStream(input.toDS())
-      .writeStream.format("memory").queryName(electName)
-      .outputMode("update").start()
-    val elected: Set[Long] =
-      try {
-        feed.grouped(math.max(1, feed.length / 2)).foreach { b =>
-          input.addData(b); eq.processAllAvailable()
-        }
-        input.addData(feed.take(feed.length / 2)) // duplicate redelivery
-        eq.processAllAvailable()
-        spark.table(electName).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getInt(3)))
-          .zipWithIndex
-          .groupBy { case ((g, _, rk), _) => (g, rk) }
-          .map { case (_, vs) => vs.maxBy(_._2)._1._2 }.toSet
-      } finally { eq.stop(); spark.catalog.dropTempView(electName) }
-    val keptTok = kept.select(col("doc_id"), col("n_tok")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val packFeed = elected.toSeq.sorted.map { id =>
-      EventStream.PackDoc(id,
-        math.floorMod(id, Chunking.PackShards.toLong), keptTok(id))
+    Replay.withShuffle4(spark) {
+      val kept = Pipeline.keptFrame(Tables.documents(spark, dir))
+      val feed = Replay.knuthSorted(keyedKept(kept).collect())(
+        r => r.id * 2654435761L % 1000003)
+      // the winner set = the last Update emission per (lang, rank)
+      val elected = Replay.run(spark, "q259_elect", "update",
+          Replay.halvesRedelivered(feed))(electionStream(_)) { sink =>
+        Replay.latestBy(sink.collect())(r => (r.getString(0), r.getInt(3)))
+          .map(_.getLong(1)).toSet
+      }
+      val keptTok = kept.select(col("doc_id"), col("n_tok")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val packFeed = elected.toSeq.sorted.map { id =>
+        EventStream.PackDoc(id,
+          math.floorMod(id, Chunking.PackShards.toLong), keptTok(id))
+      }
+      val packed = Replay.run(spark, "q259_pack", "append",
+          Replay.halves(packFeed))(packElected(_))(
+          _.as[EventStream.PackedDoc].collect().toSeq)
+      packed.toDS().toDF()
+        .select(col("doc_id"), col("shard"), col("n_tok"), col("start_off"),
+          col("end_off"), col("seq_first"), col("seq_last"), col("n_seqs"))
     }
-    val packName = s"q259_pack_$tag"
-    val pin = MemoryStream[EventStream.PackDoc]
-    val pq = packElected(pin.toDS())
-      .writeStream.format("memory").queryName(packName)
-      .outputMode("append").start()
-    val packed: Seq[EventStream.PackedDoc] =
-      try {
-        packFeed.grouped(math.max(1, packFeed.length / 2)).foreach { b =>
-          pin.addData(b); pq.processAllAvailable()
-        }
-        // materialize BEFORE dropping the sink view — the returned
-        // frame must stay valid for the caller's write
-        spark.table(packName).as[EventStream.PackedDoc].collect().toSeq
-      } finally { pq.stop(); spark.catalog.dropTempView(packName) }
-    packed.toDS().toDF()
-      .select(col("doc_id"), col("shard"), col("n_tok"), col("start_off"),
-        col("end_off"), col("seq_first"), col("seq_last"), col("n_seqs"))
   }
-
   /** DuckDB twin of [[replayEpoch]]: q162's own oracle projected to the
     * pack-stream columns — replay ≡ batch is the contract under test. */
   val replayEpochSql: String =

@@ -69,33 +69,20 @@ object PropStream {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    LateStream.withShuffle4(spark) {
+    Replay.withShuffle4(spark) {
       val feed = Replay.sortedByLongs(graft.Tables.events(spark, dir)
         .select(col("user_id").as("u"), col("event_id").as("seq"),
           // null-safe: the batch q132 CASE counts a NULL event_type as
           // non-purchase; plain === would null the non-nullable field
           (col("event_type") <=> "purchase").as("success"))
         .as[PropEvent].collect())(_.seq)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q341_conv_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[PropEvent]
-      val q = convStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val finals: Seq[(Long, Int)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          input.addData(feed.take(feed.length / 3).toSeq) // dup redelivery
-          q.processAllAvailable()
-          spark.table(name).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-            .groupBy(_._1)
-            .map { case (u, vs) => (u, vs.maxBy(_._2)._3) }.toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val finals = Replay.run(spark, "q341_conv", "append",
+          Replay.thirdsRedelivered(feed))(convStream(_)) {
+        _.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+          .groupBy(_._1)
+          .map { case (u, vs) => (u, vs.maxBy(_._2)._3) }.toSeq
+      }
       graft.operators.PropTest.propZTest(finals.toDF("u", "conv"))
     }
   }

@@ -1,12 +1,115 @@
 package graft.streaming
 
-/** Shared helpers for the replay-gate harnesses (q259/q311/q314+...).
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+/** The one replay harness. Every registered stream replay (the 24
+  * `*_stream` queries of [[graft.SparkEntry]]) proves a streaming twin
+  * by feeding a fixed feed through a live query and reading the memory
+  * sink back; the source, the micro-batch fences, the sink read and the
+  * cleanup live here, so a replay states only its feed, its batches and
+  * its read.
   *
   * Harness cost is billed to every registered replay's bench reading,
-  * so driver-side feed preparation must not do re-computed work. One
-  * owner here, like [[LateStream.withShuffle4]].
+  * so driver-side feed preparation must not do re-computed work.
   */
 object Replay {
+
+  /** Run `body` (a replay's feed preparation and stream) at 4 shuffle
+    * partitions, restoring the session's setting afterwards, also when
+    * `body` throws. State-store tasks = shuffle partitions, fixed at
+    * query start: a replay runs a handful of micro-batches over state of
+    * a few hundred rows, so one state partition per core is pure
+    * per-batch overhead — q259 measured 13.8 s → ~5 s at sf0.1 going
+    * from 32 partitions to 4. */
+  def withShuffle4[T](spark: SparkSession)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  // ------------------------------------------------------- chunk helpers
+
+  /** The feed in three contiguous micro-batches (the last may be short). */
+  def thirds[E](feed: Seq[E]): Seq[Seq[E]] =
+    feed.grouped(math.max(1, (feed.length + 2) / 3)).toSeq
+
+  /** [[thirds]] plus a duplicate redelivery of the first third —
+    * at-least-once delivery as part of the gated claim. */
+  def thirdsRedelivered[E](feed: Seq[E]): Seq[Seq[E]] =
+    thirds(feed) :+ feed.take(feed.length / 3)
+
+  /** The feed cut every `n / 2` rows (three batches when `n` is odd). */
+  def halves[E](feed: Seq[E]): Seq[Seq[E]] =
+    feed.grouped(math.max(1, feed.length / 2)).toSeq
+
+  /** [[halves]] plus a duplicate redelivery of the first half (q259). */
+  def halvesRedelivered[E](feed: Seq[E]): Seq[Seq[E]] =
+    halves(feed) :+ feed.take(feed.length / 2)
+
+  /** `batches` followed by one one-row batch per sentinel: watermark
+    * pushers on a throwaway key the caller's read filters back out. */
+  def withSentinels[E](batches: Seq[Seq[E]], sentinels: E*): Seq[Seq[E]] =
+    batches ++ sentinels.map(Seq(_))
+
+  // --------------------------------------------------------- front doors
+
+  /** Replay `batches` through `stream` over one source: each batch goes
+    * in behind its own fence, then `read` runs on the memory sink (the
+    * query's `mode` output) before the sink is dropped — so `read` must
+    * materialize what it returns. `sink` prefixes the sink's name. */
+  def run[E: Encoder, T](spark: SparkSession, sink: String, mode: String,
+      batches: Seq[Seq[E]])(stream: Dataset[E] => Dataset[_])(
+      read: DataFrame => T): T = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[E]
+    core(spark, sink, mode, stream(in.toDS()), batches.length)(
+      k => in.addData(batches(k)))(read)
+  }
+
+  /** [[run]] over two interleaved sources: chunk k of each side (while
+    * that side has one) goes in, then one fence per k — both sides'
+    * watermarks advance between micro-batches while the other side
+    * still has matches coming (q311, q328). */
+  def interleaved[A: Encoder, B: Encoder, T](spark: SparkSession,
+      sink: String, mode: String, as: Seq[Seq[A]], bs: Seq[Seq[B]])(
+      stream: (Dataset[A], Dataset[B]) => Dataset[_])(
+      read: DataFrame => T): T = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val aIn = MemoryStream[A]
+    val bIn = MemoryStream[B]
+    core(spark, sink, mode, stream(aIn.toDS(), bIn.toDS()),
+      math.max(as.length, bs.length)) { k =>
+      if (k < as.length) aIn.addData(as(k))
+      if (k < bs.length) bIn.addData(bs(k))
+    }(read)
+  }
+
+  /** Start `result` into a uniquely named memory sink, run `feed(k)`
+    * then a `processAllAvailable` fence for each k, read the sink, and
+    * stop the query and drop the sink in `finally`. */
+  private def core[T](spark: SparkSession, sink: String, mode: String,
+      result: Dataset[_], nBatches: Int)(feed: Int => Unit)(
+      read: DataFrame => T): T = {
+    val name = s"${sink}_" +
+      java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
+    val q = result.writeStream.format("memory").queryName(name)
+      .outputMode(mode).start()
+    try {
+      (0 until nBatches).foreach { k => feed(k); q.processAllAvailable() }
+      read(spark.table(name))
+    } finally { q.stop(); spark.catalog.dropTempView(name) }
+  }
+
+  // ---------------------------------------------------------- sink reads
+
+  /** The last emission per key, in sink order — an Update-mode sink's
+    * final state for each key. */
+  def latestBy[R, K](rows: Array[R])(key: R => K): Seq[R] =
+    rows.zipWithIndex.groupBy(r => key(r._1))
+      .map { case (_, vs) => vs.maxBy(_._2)._1 }.toSeq
+
+  // ------------------------------------------------------- feed ordering
 
   /** Stable sort of a collected feed by Long key(s), with every key
     * computed ONCE per element. `Array.sortBy(f)` evaluates `f` on

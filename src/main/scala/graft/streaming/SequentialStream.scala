@@ -131,8 +131,7 @@ object SequentialStream {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    LateStream.withShuffle4(spark) {
+    Replay.withShuffle4(spark) {
       val feed = Replay.sortedByLongs(graft.Tables.orders(spark, dir)
         .filter(col("o_orderdate").isNotNull && col("o_orderstatus").isNotNull)
         .selectExpr("CAST(o_orderdate AS DATE) AS d",
@@ -146,32 +145,20 @@ object SequentialStream {
           r.getInt(1), r.getInt(2), r.getInt(3))))(_.ts.getTime)
       val (batches, delayMs) =
         LateStream.boundedScramble[ObfEvent](feed, _.ts.getTime, 4, 8, 31)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q343_obf_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ObfEvent]
-      val q = obfStream(input.toDS(), feed.length.toLong, YearEndMs,
-          watermark = s"$delayMs milliseconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val rows: Seq[org.apache.spark.sql.Row] =
-        try {
-          batches.foreach { b => input.addData(b); q.processAllAvailable() }
-          // flush must clear the LAST look's Jan-1 boundary, not just
-          // maxTs: on a short feed (span ≲ 1.3 years) maxTs + 4·delay
-          // can sit before the boundary and the final look would never
-          // close — anchor on YearEndMs of the max look explicitly
-          val maxTs = feed.map(_.ts.getTime).max
-          val lastLookEnd = YearEndMs(feed.map(_.look).max)
-          val flushTs =
-            math.max(maxTs + 4 * delayMs, lastLookEnd + 2 * delayMs)
-          for (i <- 0 to 1) {
-            input.addData(Seq(ObfEvent(
-              new Timestamp(flushTs + i * delayMs), 9999, 0, 0)))
-            q.processAllAvailable()
-          }
-          spark.table(name).collect().toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      // flush must clear the LAST look's Jan-1 boundary, not just
+      // maxTs: on a short feed (span ≲ 1.3 years) maxTs + 4·delay
+      // can sit before the boundary and the final look would never
+      // close — anchor on YearEndMs of the max look explicitly
+      val maxTs = feed.map(_.ts.getTime).max
+      val lastLookEnd = YearEndMs(feed.map(_.look).max)
+      val flushTs =
+        math.max(maxTs + 4 * delayMs, lastLookEnd + 2 * delayMs)
+      val rows = Replay.run(spark, "q343_obf", "append",
+          Replay.withSentinels(batches, (0 to 1).map(i =>
+            ObfEvent(new Timestamp(flushTs + i * delayMs), 9999, 0, 0)): _*))(
+          obfStream(_, feed.length.toLong, YearEndMs,
+            watermark = s"$delayMs milliseconds"))(
+          _.collect().toSeq)
       rows.map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getDouble(5), r.getDouble(6), r.getDouble(7),
           r.getBoolean(8), r.getBoolean(9)))

@@ -102,28 +102,14 @@ object TimeDecayStream {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val feed = Replay.sortedByLongs(graft.Tables.events(spark, dir)
         .select(col("user_id").cast("long"), col("ts"),
           col("event_id").cast("long"), col("event_type"), col("value"))
         .as[TdEvent].collect())(_.ts.getTime, _.event_id)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q316_td_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TdEvent]
-      val q = timeDecayStream(input.toDS()).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append").start()
-      val credits: Seq[TdCredit] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          spark.table(name).as[TdCredit].collect().toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val credits = Replay.run(spark, "q316_td", "append",
+          Replay.thirds(feed))(timeDecayStream(_))(
+          _.as[TdCredit].collect().toSeq)
       credits.toDS().toDF()
         .groupBy(col("touch_type"))
         .agg(expr("CAST(sum(n_pairs) AS BIGINT)").as("n_pairs"),
@@ -131,7 +117,7 @@ object TimeDecayStream {
             .as("conversions"),
           expr("round(CAST(sum(rev_n) AS DOUBLE) / 1e4, 4) + 0.0")
             .as("revenue"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayRollup]]: q294's own oracle — replay ≡

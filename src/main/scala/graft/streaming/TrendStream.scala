@@ -62,32 +62,19 @@ object TrendStream {
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    LateStream.withShuffle4(spark) {
+    Replay.withShuffle4(spark) {
       val feed = Replay.sortedByLongs(graft.Tables.orders(spark, dir)
         .filter(col("o_orderpriority").isNotNull &&
           col("o_orderstatus").isNotNull)
         .selectExpr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS w",
           "o_orderkey AS seq", "o_orderstatus = 'F' AS success")
         .as[TrendEvent].collect())(_.seq)
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q344_trend_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TrendEvent]
-      val q = cellStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val finals: Seq[(Long, Long, Long)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b.toSeq); q.processAllAvailable()
-          }
-          input.addData(feed.take(feed.length / 3).toSeq) // dup redelivery
-          q.processAllAvailable()
-          spark.table(name).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-            .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val finals = Replay.run(spark, "q344_trend", "append",
+          Replay.thirdsRedelivered(feed))(cellStream(_)) {
+        _.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq
+      }
       graft.operators.TrendTest.fromCells(
         finals.toDF("w", "n_c", "x_c"))
     }

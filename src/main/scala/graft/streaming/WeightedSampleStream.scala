@@ -88,43 +88,24 @@ object WeightedSampleStream {
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Replay.withShuffle4(spark) {
       val src = graft.Tables.documents(spark, dir)
         .select(col("source"), col("doc_id"), col("n_chars"))
       val keyed = keyedStream(src, "source", "doc_id", "n_chars")
         .localCheckpoint(true) // feed + es_key join-back share it
       val feed = Replay.knuthSorted(keyed.collect())(
         r => r.id * 2654435761L % 1000003) // the q259 scramble
-      val tag = java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val name = s"q325_res_$tag"
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[KeyedRow]
-      val q = weightedSample(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      val winners: Seq[(String, Long, Long, Int)] =
-        try {
-          feed.grouped(math.max(1, (feed.length + 2) / 3)).foreach { b =>
-            input.addData(b); q.processAllAvailable()
-          }
-          input.addData(feed.take(feed.length / 3)) // duplicate redelivery
-          q.processAllAvailable()
-          spark.table(name).collect().zipWithIndex
-            .groupBy(r => (r._1.getString(0), r._1.getInt(3)))
-            .map { case (_, vs) =>
-              val r = vs.maxBy(_._2)._1
-              (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))
-            }.toSeq
-        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val winners = Replay.run(spark, "q325_res", "update",
+          Replay.thirdsRedelivered(feed))(weightedSample(_)) { sink =>
+        Replay.latestBy(sink.collect())(r => (r.getString(0), r.getInt(3)))
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+      }
       winners.toDF("source", "doc_id", "w", "rk")
         .join(keyed.toDF().select(col("g").as("source"),
           col("id").as("doc_id"), col("es")), Seq("source", "doc_id"))
         .select(col("source"), col("doc_id"), col("w"), col("rk"),
           (round(col("es"), 6) + 0.0).as("es_key"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** DuckDB twin of [[replayReservoir]]: q160's own oracle. */

@@ -1,0 +1,156 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The replay harness [[streaming.Replay]]: its chunk helpers and
+  * cleanup contract, and the registered stream replays that no other
+  * spec pins — each must equal its batch twin EXACTLY at sf0.001 (the
+  * driver hash-gates the same equality against the batch oracle at
+  * sf0.01). */
+class ReplaySpec extends AnyFunSuite {
+  lazy val spark: SparkSession = Engine.session()
+  val dir = "/root/testdata/sf0.001"
+
+  private def rows(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq.map {
+      case s: Seq[_] => s.toList
+      case x => x
+    }).toSet
+
+  /** The replay's rows against the batch twin's, projected to the
+    * replay's columns in the replay's order. */
+  private def assertTwin(replay: DataFrame, batch: DataFrame): Unit = {
+    val got = rows(replay)
+    val want = rows(batch.select(replay.columns.toSeq.map(col): _*))
+    assert(want.nonEmpty, "batch twin is empty — not probative")
+    assert(got == want,
+      s"missing=${(want -- got).take(2)} extra=${(got -- want).take(2)}")
+  }
+
+  import streaming.Replay
+
+  // ------------------------------------------------ harness contract
+
+  test("chunk helpers cut exactly the thirds / halves / redelivery batches") {
+    for (n <- 1 to 7) {
+      val feed = (1 to n).toSeq
+      val thirds = feed.grouped(math.max(1, (n + 2) / 3)).toSeq
+      val halves = feed.grouped(math.max(1, n / 2)).toSeq
+      assert(Replay.thirds(feed) == thirds, s"n=$n")
+      assert(Replay.thirdsRedelivered(feed) == thirds :+ feed.take(n / 3), s"n=$n")
+      assert(Replay.halves(feed) == halves, s"n=$n")
+      assert(Replay.halvesRedelivered(feed) == halves :+ feed.take(n / 2), s"n=$n")
+      assert(Replay.withSentinels(Replay.thirds(feed), -1, -2) ==
+        thirds ++ Seq(Seq(-1), Seq(-2)), s"n=$n")
+    }
+    // spelled out once: 7 rows → 3 + 3 + 1, redelivery of the first 2
+    assert(Replay.thirdsRedelivered(1 to 7) ==
+      Seq(Seq(1, 2, 3), Seq(4, 5, 6), Seq(7), Seq(1, 2)))
+    assert(Replay.halvesRedelivered(1 to 5) ==
+      Seq(Seq(1, 2), Seq(3, 4), Seq(5), Seq(1, 2)))
+  }
+
+  /** Nothing of a replay survives it: no running query, no sink view,
+    * and the session's shuffle setting is back. */
+  private def assertCleanedUp(prevShuffle: String): Unit = {
+    assert(!spark.streams.active.exists(q => Option(q.name).exists(_.startsWith("replayspec_"))),
+      "a replay query is still running")
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("replayspec_")),
+      "a replay sink view survived")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == prevShuffle)
+  }
+
+  test("a throwing stream function leaves no query, no sink and the shuffle setting restored") {
+    import spark.implicits._
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val e = intercept[IllegalStateException] {
+      Replay.withShuffle4(spark) {
+        assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+        Replay.run(spark, "replayspec_stream", "append",
+          Replay.thirds(Seq(1L, 2L, 3L)))(
+          _ => throw new IllegalStateException("stream boom"))(_.collect())
+      }
+    }
+    assert(e.getMessage == "stream boom")
+    assertCleanedUp(prev)
+  }
+
+  test("a throwing read stops the query, drops the sink and restores the shuffle setting") {
+    import spark.implicits._
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val e = intercept[IllegalStateException] {
+      Replay.withShuffle4(spark) {
+        Replay.run(spark, "replayspec_read", "append",
+          Replay.thirds(Seq(1L, 2L, 3L)))(_.toDF("x")) { sink =>
+          assert(sink.count() == 3)
+          throw new IllegalStateException("read boom")
+        }
+      }
+    }
+    assert(e.getMessage == "read boom")
+    assertCleanedUp(prev)
+  }
+
+  test("what read returns stays valid after the sink is dropped; both doors feed every batch") {
+    import spark.implicits._
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val one = Replay.run(spark, "replayspec_one", "append",
+      Replay.thirdsRedelivered((1L to 7L).toSeq))(_.toDF("x"))(
+      _.as[Long].collect().toSeq)
+    assertCleanedUp(prev)
+    assert(one.sorted == ((1L to 7L) ++ Seq(1L, 2L)).sorted)
+    // one side runs out of chunks first: the longer side keeps feeding
+    val two = Replay.interleaved(spark, "replayspec_two", "append",
+      Replay.thirds((1L to 7L).toSeq), Replay.thirds(Seq(10L, 20L)))(
+      (a, b) => a.union(b).toDF("x"))(_.as[Long].collect().toSeq)
+    assertCleanedUp(prev)
+    assert(two.sorted == ((1L to 7L) ++ Seq(10L, 20L)).sorted)
+  }
+
+  // ----------------------------------------- replays ≡ batch twins
+
+  test("q259: pipeline replay (halves + dup redelivery, then pack) ≡ batch q162") {
+    assertTwin(streaming.PipelineStream.replayEpoch(spark, dir),
+      operators.Pipeline.trainingPipelineEs(spark, dir)
+        .withColumn("n_seqs",
+          (col("seq_last") - col("seq_first") + 1).cast("long")))
+  }
+
+  test("q316: time-decay replay ≡ batch q294") {
+    assertTwin(streaming.TimeDecayStream.replayRollup(spark, dir),
+      operators.TimeDecay.eventTimeDecay(spark, dir))
+  }
+
+  test("q320: SCD-2 replay ≡ the closed versions of batch q66") {
+    assertTwin(streaming.EventStream.replayScd2(spark, dir),
+      operators.Scd.userStateHistory(spark, dir)
+        .filter(col("valid_to").isNotNull))
+  }
+
+  test("q321: last-touch replay ≡ batch q80") {
+    assertTwin(streaming.EventStream.replayLastTouch(spark, dir),
+      operators.Attribution.lastTouch(spark, dir))
+  }
+
+  test("q325: reservoir replay (scrambled + dup redelivery) ≡ batch q160") {
+    assertTwin(streaming.WeightedSampleStream.replayReservoir(spark, dir),
+      operators.WeightedSample.sourceWeightedSample(spark, dir))
+  }
+
+  test("q326: as-of replay (interleaved sides + pushers) ≡ batch q35") {
+    assertTwin(streaming.EventStream.replayAsof(spark, dir),
+      operators.AsOf.asofEventState(spark, dir))
+  }
+
+  test("q327: dedup replay ≡ batch q19") {
+    assertTwin(streaming.EventStream.replayDedup(spark, dir),
+      dedup.Dedup.dedupExact(spark, dir))
+  }
+
+  test("q328: two-source range-join replay ≡ batch q36") {
+    assertTwin(streaming.EventStream.replayRangeJoin(spark, dir),
+      operators.RangeJoin.rangeEventWindows(spark, dir))
+  }
+}
