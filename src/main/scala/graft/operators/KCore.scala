@@ -27,9 +27,16 @@ import graft.Tables
   * Plan/scale: per round ONE degree aggregate + two semijoins on the
   * arc frame, each round MATERIALIZED (localCheckpoint — the frame is
   * consumed three times per round; the q147 lazy-recurrence trap and
-  * its measured 2^iters blowup are documented there). Node frames are
-  * node-grade: shuffle joins, no broadcast assumption — a billion-arc
-  * graph peels with the same plan. */
+  * its measured 2^iters blowup are documented there) and counted. The
+  * loop stops at the first round that drops no arc: a round only
+  * filters, so an unchanged count is an unchanged frame, and every
+  * later round of the unrolled program would return it as is — the
+  * output is exactly the `rounds`-round one, for any input. Stopped
+  * there, every surviving src keeps degree ≥ k, so `converged` is the
+  * constant true and its min-aggregate cross join leaves the plan;
+  * only a budget spent while arcs still drop computes it. Node frames
+  * are node-grade: shuffle joins, no broadcast assumption — a
+  * billion-arc graph peels with the same plan. */
 object KCore {
 
   /** One peel round: keep arcs whose BOTH endpoints have degree ≥ k
@@ -46,41 +53,52 @@ object KCore {
       .select("src", "dst")
   }
 
-  /** Fixed-round peel. Returns surviving (src, degree, converged) —
-    * `converged` true when a final extra degree check finds no node
-    * below k (the fixed-point certificate). */
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    require(k >= 1 && rounds >= 1, s"need k/rounds >= 1, got $k/$rounds")
-    var e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds)
-      e = peelOnce(e, k).localCheckpoint(true)
-    val deg = e.groupBy("src")
-      .agg(expr("CAST(count(1) AS BIGINT)").as("degree"))
-    val conv = deg.agg(
-      coalesce(min(col("degree")) >= k, lit(true)).as("converged"))
-    deg.crossJoin(broadcast(conv))
-  }
+  /** What [[peel]] left: the surviving arcs (checkpointed), the rounds
+    * run — the confirming round that dropped nothing included — and
+    * whether the loop stopped at that fixed point. */
+  private[graft] final case class Peeled(arcs: DataFrame, rounds: Int,
+      stable: Boolean)
 
-  /** Run-to-fixed-point variant: peel until the arc count stops
-    * changing (each round's count is the one driver scalar — the
-    * pagerankUntil convention). Returns (survivors, roundsRun). */
-  def kCoreUntil(edges: DataFrame, k: Int,
-      maxRounds: Int = 64): (DataFrame, Int) = {
+  /** The one peel loop: peel until a round leaves the arc count
+    * unchanged or `budget` rounds have run (each round's count is the
+    * one driver scalar — the pagerankUntil convention). */
+  private[graft] def peel(edges: DataFrame, k: Int, budget: Int): Peeled = {
     var e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .localCheckpoint(true)
     var prev = e.count()
     var done = 0
     var stable = false
-    while (!stable && done < maxRounds) {
+    while (!stable && done < budget) {
       e = peelOnce(e, k).localCheckpoint(true)
       val now = e.count()
       stable = now == prev
       prev = now
       done += 1
     }
-    (e.groupBy("src").agg(expr("CAST(count(1) AS BIGINT)").as("degree")),
-      done)
+    Peeled(e, done, stable)
+  }
+
+  private def degrees(e: DataFrame): DataFrame =
+    e.groupBy("src").agg(expr("CAST(count(1) AS BIGINT)").as("degree"))
+
+  /** Fixed-round peel. Returns surviving (src, degree, converged) —
+    * `converged` true when no surviving node is below k (the
+    * fixed-point certificate). */
+  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    require(k >= 1 && rounds >= 1, s"need k/rounds >= 1, got $k/$rounds")
+    val p = peel(edges, k, rounds)
+    val deg = degrees(p.arcs)
+    if (p.stable) deg.withColumn("converged", lit(true))
+    else deg.crossJoin(broadcast(deg.agg(
+      coalesce(min(col("degree")) >= k, lit(true)).as("converged"))))
+  }
+
+  /** Run-to-fixed-point variant: [[peel]] with `maxRounds` as the
+    * budget. Returns (survivors, roundsRun). */
+  def kCoreUntil(edges: DataFrame, k: Int,
+      maxRounds: Int = 64): (DataFrame, Int) = {
+    val p = peel(edges, k, maxRounds)
+    (degrees(p.arcs), p.rounds)
   }
 
   val K = 3

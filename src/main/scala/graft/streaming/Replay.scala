@@ -39,13 +39,13 @@ object Replay {
   def thirdsRedelivered[E](feed: Seq[E]): Seq[Seq[E]] =
     thirds(feed) :+ feed.take(feed.length / 3)
 
-  /** The feed cut every `n / 2` rows (three batches when `n` is odd). */
+  /** The feed in two contiguous micro-batches (the last may be short). */
   def halves[E](feed: Seq[E]): Seq[Seq[E]] =
-    feed.grouped(math.max(1, feed.length / 2)).toSeq
+    feed.grouped(math.max(1, (feed.length + 1) / 2)).toSeq
 
   /** [[halves]] plus a duplicate redelivery of the first half (q259). */
   def halvesRedelivered[E](feed: Seq[E]): Seq[Seq[E]] =
-    halves(feed) :+ feed.take(feed.length / 2)
+    halves(feed) :+ feed.take((feed.length + 1) / 2)
 
   /** `batches` followed by one one-row batch per sentinel: watermark
     * pushers on a throwaway key the caller's read filters back out. */

@@ -1,7 +1,12 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The replay harness [[streaming.Replay]]: its chunk helpers and
@@ -37,19 +42,21 @@ class ReplaySpec extends AnyFunSuite {
     for (n <- 1 to 7) {
       val feed = (1 to n).toSeq
       val thirds = feed.grouped(math.max(1, (n + 2) / 3)).toSeq
-      val halves = feed.grouped(math.max(1, n / 2)).toSeq
+      val halves = feed.grouped((n + 1) / 2).toSeq
       assert(Replay.thirds(feed) == thirds, s"n=$n")
       assert(Replay.thirdsRedelivered(feed) == thirds :+ feed.take(n / 3), s"n=$n")
       assert(Replay.halves(feed) == halves, s"n=$n")
-      assert(Replay.halvesRedelivered(feed) == halves :+ feed.take(n / 2), s"n=$n")
+      assert(Replay.halvesRedelivered(feed) == halves :+ feed.take((n + 1) / 2), s"n=$n")
+      assert(Replay.halves(feed).length == math.min(n, 2), s"n=$n")
       assert(Replay.withSentinels(Replay.thirds(feed), -1, -2) ==
         thirds ++ Seq(Seq(-1), Seq(-2)), s"n=$n")
     }
-    // spelled out once: 7 rows → 3 + 3 + 1, redelivery of the first 2
+    // spelled out once: 7 rows → 3 + 3 + 1, redelivery of the first 2;
+    // an odd feed halves as 3 + 2, never with a third one-row batch
     assert(Replay.thirdsRedelivered(1 to 7) ==
       Seq(Seq(1, 2, 3), Seq(4, 5, 6), Seq(7), Seq(1, 2)))
     assert(Replay.halvesRedelivered(1 to 5) ==
-      Seq(Seq(1, 2), Seq(3, 4), Seq(5), Seq(1, 2)))
+      Seq(Seq(1, 2, 3), Seq(4, 5), Seq(1, 2, 3)))
   }
 
   /** Nothing of a replay survives it: no running query, no sink view,
@@ -112,7 +119,28 @@ class ReplaySpec extends AnyFunSuite {
   // ----------------------------------------- replays ≡ batch twins
 
   test("q259: pipeline replay (halves + dup redelivery, then pack) ≡ batch q162") {
-    assertTwin(streaming.PipelineStream.replayEpoch(spark, dir),
+    // executed micro-batches (progress with an addBatch phase) of the
+    // two q259 queries; their termination events drain the bus
+    val runs = ConcurrentHashMap.newKeySet[UUID]()
+    val batches = new AtomicInteger
+    val ended = new CountDownLatch(2)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        if (Option(e.name).exists(_.startsWith("q259_"))) runs.add(e.runId)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (runs.contains(e.progress.runId) &&
+            e.progress.durationMs.containsKey("addBatch")) batches.incrementAndGet()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (runs.contains(e.runId)) ended.countDown()
+    }
+    spark.streams.addListener(listener)
+    val replay = try {
+      val df = streaming.PipelineStream.replayEpoch(spark, dir)
+      assert(ended.await(60, TimeUnit.SECONDS))
+      df
+    } finally spark.streams.removeListener(listener)
+    assert(batches.get == 5, "election 2 + redelivery 1, pack 2")
+    assertTwin(replay,
       operators.Pipeline.trainingPipelineEs(spark, dir)
         .withColumn("n_seqs",
           (col("seq_last") - col("seq_first") + 1).cast("long")))
