@@ -15,7 +15,9 @@ import graft.functions.expressions.{CosineSimilarity, Hash48, SumInt128}
   * to available cores rather than the 200 default, and graft's native
   * SQL functions injected through SparkSessionExtensions (so
   * `spark.sql("... cosine_sim(a, b) ...")` works alongside the Column
-  * API).
+  * API). Local files go through [[graft.LocalFs]], Hadoop's checksummed
+  * local filesystem with permissions set in-process rather than by a
+  * forked `chmod` per file and directory.
   */
 object Engine {
 
@@ -117,6 +119,7 @@ object Engine {
       // improvement on q20/q22, with less run-to-run variance.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

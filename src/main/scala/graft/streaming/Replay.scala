@@ -1,6 +1,9 @@
 package graft.streaming
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** The one replay harness. Every registered stream replay (the 24
@@ -67,38 +70,71 @@ object Replay {
       k => in.addData(batches(k)))(read)
   }
 
-  /** [[run]] over two interleaved sources: chunk k of each side (while
+  /** [[run]] over two interleaved sides: chunk k of each side (while
     * that side has one) goes in, then one fence per k — both sides'
     * watermarks advance between micro-batches while the other side
-    * still has matches coming (q311, q328). */
-  def interleaved[A: Encoder, B: Encoder, T](spark: SparkSession,
-      sink: String, mode: String, as: Seq[Seq[A]], bs: Seq[Seq[B]])(
-      stream: (Dataset[A], Dataset[B]) => Dataset[_])(
+    * still has matches coming (q311, q328).
+    *
+    * Both sides ride one source of `(Some(a), None)` / `(None, Some(b))`
+    * pairs, so each fence's two chunks are one offset and land in the
+    * same micro-batch. Over two sources the engine could plan a batch
+    * between the two `addData` calls: q311 and q328 then split their
+    * first fence into a one-sided batch each in about half of their
+    * runs, 7 micro-batches instead of 6. */
+  def interleaved[A: Encoder: TypeTag, B: Encoder: TypeTag, T](
+      spark: SparkSession, sink: String, mode: String, as: Seq[Seq[A]],
+      bs: Seq[Seq[B]])(stream: (Dataset[A], Dataset[B]) => Dataset[_])(
       read: DataFrame => T): T = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val aIn = MemoryStream[A]
-    val bIn = MemoryStream[B]
-    core(spark, sink, mode, stream(aIn.toDS(), bIn.toDS()),
+    val in = MemoryStream(
+      spark.implicits.newProductEncoder[(Option[A], Option[B])], spark)
+    val sides = in.toDS()
+    core(spark, sink, mode, stream(sides.flatMap(_._1), sides.flatMap(_._2)),
       math.max(as.length, bs.length)) { k =>
-      if (k < as.length) aIn.addData(as(k))
-      if (k < bs.length) bIn.addData(bs(k))
+      def chunk[E](side: Seq[Seq[E]]): Seq[E] = side.lift(k).getOrElse(Nil)
+      in.addData(chunk(as).map(a => (Option(a), Option.empty[B])) ++
+        chunk(bs).map(b => (Option.empty[A], Option(b))))
     }(read)
   }
 
-  /** Start `result` into a uniquely named memory sink, run `feed(k)`
-    * then a `processAllAvailable` fence for each k, read the sink, and
-    * stop the query and drop the sink in `finally`. */
+  /** The session key naming the class behind every checkpoint log and
+    * state-store file a streaming query writes. */
+  val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Build `result`, start it into a uniquely named memory sink, run
+    * `feed(k)` then a `processAllAvailable` fence for each k, read the
+    * sink, and stop the query and drop the sink in `finally`.
+    *
+    * From `start()` to `stop()` the query checkpoints through Hadoop's
+    * `FileSystem` API ([[FileSystemBasedCheckpointFileManager]]), and
+    * the session's previous manager (or none) comes back in `finally`.
+    * Spark's default manager renames through `FileContext`, which asks
+    * `getFileLinkStatus` of both paths; without Hadoop's native library
+    * each ask forks a `readlink`, and every offset, commit and
+    * state-store file is one such rename: about 15,000 processes per
+    * pass over the 24 replays at sf0.01. `RawLocalFileSystem.rename` is
+    * a plain `File.renameTo`. The FileSystem manager checks then
+    * renames, which is safe only where no other writer shares the
+    * checkpoint: true of every replay, whose checkpoint is its own
+    * throwaway temp directory, so the setting lives here and not in
+    * [[graft.Engine]]. Checkpoint checksums and the `.crc` files stay
+    * on. */
   private def core[T](spark: SparkSession, sink: String, mode: String,
-      result: Dataset[_], nBatches: Int)(feed: Int => Unit)(
+      result: => Dataset[_], nBatches: Int)(feed: Int => Unit)(
       read: DataFrame => T): T = {
     val name = s"${sink}_" +
       java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-    val q = result.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
+    val prevManager = spark.conf.getOption(CheckpointManagerKey)
+    spark.conf.set(CheckpointManagerKey,
+      classOf[FileSystemBasedCheckpointFileManager].getName)
     try {
-      (0 until nBatches).foreach { k => feed(k); q.processAllAvailable() }
-      read(spark.table(name))
-    } finally { q.stop(); spark.catalog.dropTempView(name) }
+      val q = result.writeStream.format("memory").queryName(name)
+        .outputMode(mode).start()
+      try {
+        (0 until nBatches).foreach { k => feed(k); q.processAllAvailable() }
+        read(spark.table(name))
+      } finally { q.stop(); spark.catalog.dropTempView(name) }
+    } finally prevManager.fold(spark.conf.unset(CheckpointManagerKey))(
+      spark.conf.set(CheckpointManagerKey, _))
   }
 
   // ---------------------------------------------------------- sink reads

@@ -5,6 +5,7 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.{FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,6 +37,8 @@ class ReplaySpec extends AnyFunSuite {
 
   import streaming.Replay
 
+  private val fsManager = classOf[FileSystemBasedCheckpointFileManager].getName
+
   // ------------------------------------------------ harness contract
 
   test("chunk helpers cut exactly the thirds / halves / redelivery batches") {
@@ -59,19 +62,26 @@ class ReplaySpec extends AnyFunSuite {
       Seq(Seq(1, 2, 3), Seq(4, 5), Seq(1, 2, 3)))
   }
 
+  /** The session settings a replay scopes: the shuffle partitions
+    * (`withShuffle4`) and the checkpoint manager (every replay). */
+  private def settings(): (String, Option[String]) =
+    (spark.conf.get("spark.sql.shuffle.partitions"),
+      spark.conf.getOption(Replay.CheckpointManagerKey))
+
   /** Nothing of a replay survives it: no running query, no sink view,
-    * and the session's shuffle setting is back. */
-  private def assertCleanedUp(prevShuffle: String): Unit = {
+    * and the session's shuffle setting and checkpoint manager are back
+    * (an absent manager stays absent). */
+  private def assertCleanedUp(prev: (String, Option[String])): Unit = {
     assert(!spark.streams.active.exists(q => Option(q.name).exists(_.startsWith("replayspec_"))),
       "a replay query is still running")
     assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("replayspec_")),
       "a replay sink view survived")
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == prevShuffle)
+    assert(settings() == prev)
   }
 
-  test("a throwing stream function leaves no query, no sink and the shuffle setting restored") {
+  test("a throwing stream function leaves no query, no sink and the session settings restored") {
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val prev = settings()
     val e = intercept[IllegalStateException] {
       Replay.withShuffle4(spark) {
         assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
@@ -84,14 +94,16 @@ class ReplaySpec extends AnyFunSuite {
     assertCleanedUp(prev)
   }
 
-  test("a throwing read stops the query, drops the sink and restores the shuffle setting") {
+  test("a throwing read stops the query, drops the sink and restores the session settings") {
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.unset(Replay.CheckpointManagerKey) // absent must stay absent
+    val prev = settings()
     val e = intercept[IllegalStateException] {
       Replay.withShuffle4(spark) {
         Replay.run(spark, "replayspec_read", "append",
           Replay.thirds(Seq(1L, 2L, 3L)))(_.toDF("x")) { sink =>
           assert(sink.count() == 3)
+          assert(spark.conf.get(Replay.CheckpointManagerKey) == fsManager)
           throw new IllegalStateException("read boom")
         }
       }
@@ -102,7 +114,7 @@ class ReplaySpec extends AnyFunSuite {
 
   test("what read returns stays valid after the sink is dropped; both doors feed every batch") {
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val prev = settings()
     val one = Replay.run(spark, "replayspec_one", "append",
       Replay.thirdsRedelivered((1L to 7L).toSeq))(_.toDF("x"))(
       _.as[Long].collect().toSeq)
@@ -116,17 +128,36 @@ class ReplaySpec extends AnyFunSuite {
     assert(two.sorted == ((1L to 7L) ++ Seq(10L, 20L)).sorted)
   }
 
+  test("a replay checkpoints through the FileSystem manager and puts back the session's own") {
+    import spark.implicits._
+    val own = classOf[FileContextBasedCheckpointFileManager].getName
+    spark.conf.set(Replay.CheckpointManagerKey, own)
+    try {
+      val prev = settings()
+      val seen = Replay.run(spark, "replayspec_manager", "append",
+        Replay.thirds((1L to 5L).toSeq))(_.toDF("x")) { sink =>
+        assert(sink.count() == 5)
+        spark.conf.get(Replay.CheckpointManagerKey)
+      }
+      assert(seen == fsManager)
+      assertCleanedUp(prev)
+      assert(spark.conf.get(Replay.CheckpointManagerKey) == own)
+    } finally spark.conf.unset(Replay.CheckpointManagerKey)
+  }
+
   // ----------------------------------------- replays ≡ batch twins
 
-  test("q259: pipeline replay (halves + dup redelivery, then pack) ≡ batch q162") {
-    // executed micro-batches (progress with an addBatch phase) of the
-    // two q259 queries; their termination events drain the bus
+  /** `body`'s result and the micro-batches it executed (progress with
+    * an addBatch phase) over the `queries` streaming queries it starts
+    * whose names begin with `prefix`; their termination events drain
+    * the listener bus before the count is read. */
+  private def withBatchCount[T](prefix: String, queries: Int)(body: => T): (T, Int) = {
     val runs = ConcurrentHashMap.newKeySet[UUID]()
     val batches = new AtomicInteger
-    val ended = new CountDownLatch(2)
+    val ended = new CountDownLatch(queries)
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        if (Option(e.name).exists(_.startsWith("q259_"))) runs.add(e.runId)
+        if (Option(e.name).exists(_.startsWith(prefix))) runs.add(e.runId)
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
         if (runs.contains(e.progress.runId) &&
             e.progress.durationMs.containsKey("addBatch")) batches.incrementAndGet()
@@ -134,12 +165,17 @@ class ReplaySpec extends AnyFunSuite {
         if (runs.contains(e.runId)) ended.countDown()
     }
     spark.streams.addListener(listener)
-    val replay = try {
-      val df = streaming.PipelineStream.replayEpoch(spark, dir)
+    try {
+      val out = body
       assert(ended.await(60, TimeUnit.SECONDS))
-      df
+      (out, batches.get)
     } finally spark.streams.removeListener(listener)
-    assert(batches.get == 5, "election 2 + redelivery 1, pack 2")
+  }
+
+  test("q259: pipeline replay (halves + dup redelivery, then pack) ≡ batch q162") {
+    val (replay, batches) = withBatchCount("q259_", 2)(
+      streaming.PipelineStream.replayEpoch(spark, dir))
+    assert(batches == 5, "election 2 + redelivery 1, pack 2")
     assertTwin(replay,
       operators.Pipeline.trainingPipelineEs(spark, dir)
         .withColumn("n_seqs",
@@ -177,8 +213,14 @@ class ReplaySpec extends AnyFunSuite {
       dedup.Dedup.dedupExact(spark, dir))
   }
 
-  test("q328: two-source range-join replay ≡ batch q36") {
-    assertTwin(streaming.EventStream.replayRangeJoin(spark, dir),
-      operators.RangeJoin.rangeEventWindows(spark, dir))
+  test("q328: two-source range-join replay ≡ batch q36, in the same micro-batches every run") {
+    // both sides' chunks of one fence share a micro-batch, and each
+    // fence's watermark move asks for one no-data batch: 3 × 2
+    for (_ <- 1 to 3) {
+      val (replay, batches) = withBatchCount("q328_", 1)(
+        streaming.EventStream.replayRangeJoin(spark, dir))
+      assert(batches == 6, "3 fences, each a data batch and a no-data batch")
+      assertTwin(replay, operators.RangeJoin.rangeEventWindows(spark, dir))
+    }
   }
 }
