@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermission
+import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -22,23 +22,15 @@ object LocalFs {
 
   /** `RawLocalFileSystem` whose `setPermission` goes through NIO. The
     * sticky bit has no NIO name, so a mode that sets it takes the stock
-    * path. */
+    * path. The rwx triples are read per action, not from `toString`: a
+    * subclass such as `FsCreateModes` prints both its masked and
+    * unmasked modes. */
   class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =
       if (permission.getStickyBit) super.setPermission(p, permission)
       else Files.setPosixFilePermissions(pathToFile(p).toPath,
-        posix(permission.toShort))
-  }
-
-  /** The rwx bits of `mode` as NIO permissions. Read from `toShort`, not
-    * `toString`: a subclass such as `FsCreateModes` prints both its
-    * masked and unmasked modes. `PosixFilePermission` lists the bits
-    * from OWNER_READ (0400) down to OTHERS_EXECUTE (0001). */
-  private def posix(mode: Int): java.util.Set[PosixFilePermission] = {
-    val set = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    PosixFilePermission.values.zipWithIndex.foreach { case (p, i) =>
-      if ((mode & (0x100 >> i)) != 0) set.add(p)
-    }
-    set
+        PosixFilePermissions.fromString(Seq(permission.getUserAction,
+          permission.getGroupAction, permission.getOtherAction)
+          .map(_.SYMBOL).mkString))
   }
 }

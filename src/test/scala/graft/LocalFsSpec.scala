@@ -11,7 +11,7 @@ import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.permission.{FsCreateModes, FsPermission}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -92,7 +92,7 @@ class LocalFsSpec extends AnyFunSuite {
     def mode(p: NioPath): Int =
       Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
     // the sticky bit (01777) only means something on a directory
-    val cases = for (octal <- Seq("600", "644", "700", "755", "777", "1777");
+    val cases = for (octal <- Seq("600", "640", "644", "700", "750", "755", "777", "1777");
                      isDir <- Seq(false, true) if isDir || octal != "1777")
       yield (octal, isDir)
     inTmpDir("localfsspec_perm") { dir =>
@@ -111,6 +111,13 @@ class LocalFsSpec extends AnyFunSuite {
         assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(a)) ==
           perm.toString.take(9).replace('t', 'x'), what)
       }
+      // a create's mode carries its unmasked mode too; the masked one is set
+      val created = FsCreateModes.create(new FsPermission(Integer.parseInt("644", 8).toShort),
+        new FsPermission(Integer.parseInt("666", 8).toShort))
+      val Seq(a, b) = Seq("ours", "stock").map(who => Files.createFile(dir.resolve(s"${who}_create")))
+      ours.setPermission(new Path(a.toUri), created)
+      stock.setPermission(new Path(b.toUri), created)
+      assert(mode(a) == mode(b) && mode(a) == Integer.parseInt("644", 8), created.toString)
     }
   }
 }

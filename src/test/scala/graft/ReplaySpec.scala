@@ -213,7 +213,7 @@ class ReplaySpec extends AnyFunSuite {
       dedup.Dedup.dedupExact(spark, dir))
   }
 
-  test("q328: two-source range-join replay ≡ batch q36, in the same micro-batches every run") {
+  test("q328: stream-stream range-join replay ≡ batch q36, in the same micro-batches every run") {
     // both sides' chunks of one fence share a micro-batch, and each
     // fence's watermark move asks for one no-data batch: 3 × 2
     for (_ <- 1 to 3) {
