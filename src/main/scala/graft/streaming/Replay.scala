@@ -1,7 +1,10 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import scala.reflect.runtime.universe.TypeTag
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -25,10 +28,17 @@ object Replay {
     * a few hundred rows, so one state partition per core is pure
     * per-batch overhead — q259 measured 13.8 s → ~5 s at sf0.1 going
     * from 32 partitions to 4. */
-  def withShuffle4[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  def withShuffle4[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions", "4")(body)
+
+  /** Run `body` with session conf `key` set to `value`, then put back
+    * the session's previous value, also when `body` throws; an absent
+    * value stays absent. */
+  private def withConf[T](spark: SparkSession, key: String, value: String)(
+      body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   // ------------------------------------------------------- chunk helpers
@@ -100,9 +110,27 @@ object Replay {
     * state-store file a streaming query writes. */
   val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** The session key of adaptive query execution, off while a replay's
+    * query starts. */
+  val AdaptiveKey = "spark.sql.adaptive.enabled"
+
   /** Build `result`, start it into a uniquely named memory sink, run
     * `feed(k)` then a `processAllAvailable` fence for each k, read the
     * sink, and stop the query and drop the sink in `finally`.
+    *
+    * The query checkpoints into a fresh temp directory of its own,
+    * named after the query and deleted in `finally`, also when the
+    * replay throws. Left to Spark, a
+    * memory sink gets a `temporary-*` directory with a WARN line, and
+    * a query that fails keeps it.
+    *
+    * AQE is off while `start()` runs, where the query clones the
+    * session: the analyzer warns there that streaming disables AQE
+    * whenever the session has it on. Spark 4.1 in fact turns AQE off
+    * in the clone only for a stateful plan, with a WARN line of its
+    * own, so a stateless replay would lose AQE here; every registered
+    * replay is stateful. The session's own value is back before the
+    * first batch, so the caller's batch work and `read` keep AQE.
     *
     * From `start()` to `stop()` the query checkpoints through Hadoop's
     * `FileSystem` API ([[FileSystemBasedCheckpointFileManager]]), and
@@ -123,18 +151,17 @@ object Replay {
       read: DataFrame => T): T = {
     val name = s"${sink}_" +
       java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-    val prevManager = spark.conf.getOption(CheckpointManagerKey)
-    spark.conf.set(CheckpointManagerKey,
-      classOf[FileSystemBasedCheckpointFileManager].getName)
-    try {
-      val q = result.writeStream.format("memory").queryName(name)
-        .outputMode(mode).start()
+    val checkpoint = Files.createTempDirectory(s"$name-")
+    try withConf(spark, CheckpointManagerKey,
+        classOf[FileSystemBasedCheckpointFileManager].getName) {
+      val writer = result.writeStream.format("memory").queryName(name)
+        .outputMode(mode).option("checkpointLocation", checkpoint.toString)
+      val q = withConf(spark, AdaptiveKey, "false")(writer.start())
       try {
         (0 until nBatches).foreach { k => feed(k); q.processAllAvailable() }
         read(spark.table(name))
       } finally { q.stop(); spark.catalog.dropTempView(name) }
-    } finally prevManager.fold(spark.conf.unset(CheckpointManagerKey))(
-      spark.conf.set(CheckpointManagerKey, _))
+    } finally FileUtils.deleteQuietly(checkpoint.toFile)
   }
 
   // ---------------------------------------------------------- sink reads

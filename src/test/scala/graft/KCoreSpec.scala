@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -85,33 +81,6 @@ class KCoreSpec extends AnyFunSuite {
       coalesce(min(col("degree")) >= k, lit(true)).as("converged"))))
   }
 
-  /** `body`'s value and the Spark jobs it started: its jobs carry a
-    * job group a listener counts; one fence job in another group,
-    * seen by the same listener, drains the bus before the count. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"kcorespec-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`tag`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$tag-fence" => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$tag-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("triangle + pendant at k=2: the pendant peels, the triangle stays") {
     val out = KCore.kCorePeel(
       arcs(Seq((0L, 1L), (1L, 2L), (2L, 0L), (0L, 3L))), 2, 2)
@@ -171,9 +140,9 @@ class KCoreSpec extends AnyFunSuite {
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("NestedLoopJoin") && !plan.contains("CartesianProduct"),
       plan)
-    val (got, exitJobs) = jobsOf(peeled(KCore.kCorePeel(g, 3, KCore.Rounds)))
+    val (got, exitJobs) = Jobs.counted(spark)(peeled(KCore.kCorePeel(g, 3, KCore.Rounds)))
     val (want, unrolledJobs) =
-      jobsOf(peeled(unrolledPeel(g, 3, KCore.Rounds)))
+      Jobs.counted(spark)(peeled(unrolledPeel(g, 3, KCore.Rounds)))
     assert(got == want && got == refPeel(sym(k5), 3, KCore.Rounds))
     assert(exitJobs < unrolledJobs, s"$exitJobs vs $unrolledJobs")
   }

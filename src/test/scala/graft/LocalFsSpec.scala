@@ -20,9 +20,10 @@ import graft.sinks.Sinks
 import graft.streaming.Replay
 
 /** graft's local file I/O forks no process: a replay (checkpoint logs
-  * and state-store files) and a keyed-overwrite load (parquet files,
-  * `.crc` files, partition directories) run with no Hadoop `Shell`
-  * child, counted by JFR rather than timed. And [[LocalFs.Raw]] sets
+  * and state-store files), a keyed-overwrite load (parquet files,
+  * `.crc` files, partition directories) and a `Tables` read of what it
+  * wrote (the schema cache lists the leaf files) run with no Hadoop
+  * `Shell` child, counted by JFR rather than timed. And [[LocalFs.Raw]] sets
   * exactly the mode bits stock `RawLocalFileSystem` sets. */
 class LocalFsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session()
@@ -45,7 +46,7 @@ class LocalFsSpec extends AnyFunSuite {
     assert(local.getVerifyChecksum, ".crc verification must stay on")
   }
 
-  test("a replay and a keyed-overwrite load start no Hadoop Shell process") {
+  test("a replay, a keyed-overwrite load and a table read start no Hadoop Shell process") {
     import spark.implicits._
     spark.range(1).count() // session and Hadoop's Shell class are up
     inTmpDir("localfsspec") { out =>
@@ -65,7 +66,10 @@ class LocalFsSpec extends AnyFunSuite {
         val path = out.resolve("keyed").toString
         Sinks.KeyedOverwriteSink.write(
           (1 to 12).map(i => (i % 3, s"v$i")).toDF("k", "v"), path, "k")
-        (counted, spark.read.parquet(path).count())
+        // a table read lists its leaf files for the schema cache's key
+        Files.move(out.resolve("keyed"), out.resolve("keyed.parquet"))
+        Tables(spark, out.toString, "keyed")
+        (counted, Tables(spark, out.toString, "keyed").count())
       } finally rec.stop()
       val jfr = out.resolve("shell.jfr")
       rec.dump(jfr)

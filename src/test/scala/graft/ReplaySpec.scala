@@ -63,19 +63,28 @@ class ReplaySpec extends AnyFunSuite {
   }
 
   /** The session settings a replay scopes: the shuffle partitions
-    * (`withShuffle4`) and the checkpoint manager (every replay). */
-  private def settings(): (String, Option[String]) =
+    * (`withShuffle4`), the checkpoint manager and AQE (every replay). */
+  private def settings(): (String, Option[String], Option[String]) =
     (spark.conf.get("spark.sql.shuffle.partitions"),
-      spark.conf.getOption(Replay.CheckpointManagerKey))
+      spark.conf.getOption(Replay.CheckpointManagerKey),
+      spark.conf.getOption(Replay.AdaptiveKey))
+
+  /** The replay checkpoint directories under the temp directory whose
+    * query names begin with `prefix`. */
+  private def checkpoints(prefix: String): Seq[java.io.File] =
+    new java.io.File(System.getProperty("java.io.tmpdir"))
+      .listFiles((_, n) => n.startsWith(prefix)).toSeq
 
   /** Nothing of a replay survives it: no running query, no sink view,
-    * and the session's shuffle setting and checkpoint manager are back
-    * (an absent manager stays absent). */
-  private def assertCleanedUp(prev: (String, Option[String])): Unit = {
+    * no checkpoint directory, and the session's shuffle setting,
+    * checkpoint manager and AQE are back (an absent value stays
+    * absent). */
+  private def assertCleanedUp(prev: (String, Option[String], Option[String])): Unit = {
     assert(!spark.streams.active.exists(q => Option(q.name).exists(_.startsWith("replayspec_"))),
       "a replay query is still running")
     assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("replayspec_")),
       "a replay sink view survived")
+    assert(checkpoints("replayspec_").isEmpty, "a replay checkpoint survived")
     assert(settings() == prev)
   }
 
@@ -104,6 +113,11 @@ class ReplaySpec extends AnyFunSuite {
           Replay.thirds(Seq(1L, 2L, 3L)))(_.toDF("x")) { sink =>
           assert(sink.count() == 3)
           assert(spark.conf.get(Replay.CheckpointManagerKey) == fsManager)
+          assert(spark.conf.get(Replay.AdaptiveKey) == "true",
+            "the sink read keeps the session's AQE")
+          val Seq(cp) = checkpoints("replayspec_read_")
+          assert(new java.io.File(cp, "offsets").isDirectory,
+            "the query checkpoints into the replay's own directory")
           throw new IllegalStateException("read boom")
         }
       }

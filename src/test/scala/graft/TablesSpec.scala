@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, StandardCopyOption}
+
+import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -8,6 +10,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +22,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * now adapts; this spec synthesizes one tiny fixture per physical type
   * and asserts identical loaded rows, so the NEXT regeneration in
   * either direction is caught by a unit test instead of the gate.
+  *
+  * Also pins the schema cache of `Tables.apply`: a repeated read starts
+  * no Spark job and equals a stock `spark.read.parquet`, a changed file
+  * or parquet conf re-infers, a missing path fails as a stock read
+  * does, and two reads stay two relations.
   */
 class TablesSpec extends AnyFunSuite {
   lazy val spark = Engine.session()
@@ -161,5 +169,118 @@ class TablesSpec extends AnyFunSuite {
       Tables.validate(spark, dir, Seq("events")))
     assert(e.getMessage.contains("events.value"))
     assert(e.getMessage.contains("SCHEMA CONTRACT"))
+  }
+
+  // ------------------------------------------------------ schema cache
+
+  private def stock(dir: String, name: String): DataFrame =
+    spark.read.parquet(s"$dir/$name.parquet")
+
+  private def sorted(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** A read of `name` under `dir` through `Tables.apply` after a first
+    * one: it starts no job and equals a stock read, schema and rows. */
+  private def assertCachedRead(dir: String, name: String): Unit = {
+    Tables(spark, dir, name)
+    val (again, jobs) = Jobs.counted(spark)(Tables(spark, dir, name))
+    assert(jobs == 0, s"$name: a repeated read started $jobs jobs")
+    assert(again.schema == stock(dir, name).schema, name)
+    assert(sorted(again) == sorted(stock(dir, name)), name)
+  }
+
+  /** Two plain tables, each a directory Spark wrote. */
+  private def writePlain(): String = {
+    val dir = Files.createTempDirectory("graft-tables-plain").toString
+    import spark.implicits._
+    Seq((0L, "AFRICA"), (1L, "AMERICA")).toDF("r_regionkey", "r_name")
+      .coalesce(1).write.parquet(s"$dir/region.parquet")
+    Seq((0L, "ALGERIA", 0L), (1L, "ARGENTINA", 1L), (2L, "BRAZIL", 1L))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+      .coalesce(1).write.parquet(s"$dir/nation.parquet")
+    dir
+  }
+
+  test("schema cache: a first read infers with a job, a repeated read starts none and equals a stock read") {
+    val dir = writePlain()
+    val (_, first) = Jobs.counted(spark)(Tables(spark, dir, "nation"))
+    assert(first >= 1, "a first read infers its schema with a Spark job")
+    assertCachedRead(dir, "nation")
+    assertCachedRead(dir, "region")
+  }
+
+  test("schema cache: every events.ts physical type reads back as a stock read does") {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try assertCachedRead(writeNanos(), "events")
+    finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    assertCachedRead(writeMicros(ntz = true), "events")
+    assertCachedRead(writeMicros(ntz = false), "events")
+  }
+
+  test("schema cache: a file rewritten at the same path with a new schema re-infers") {
+    val dir = writePlain()
+    val file = new java.io.File(dir, "one.parquet").toPath
+    def partOf(table: String) = new java.io.File(dir, s"$table.parquet")
+      .listFiles((_, n) => n.startsWith("part-") && n.endsWith(".parquet")).head.toPath
+    Files.copy(partOf("region"), file)
+    assertCachedRead(dir, "one")
+    assert(Tables(spark, dir, "one").columns.toSeq == Seq("r_regionkey", "r_name"))
+    Files.copy(partOf("nation"), file, StandardCopyOption.REPLACE_EXISTING)
+    assert(Tables(spark, dir, "one").columns.toSeq ==
+      Seq("n_nationkey", "n_name", "n_regionkey"))
+    assertCachedRead(dir, "one")
+    // and a directory Spark overwrites in place
+    import spark.implicits._
+    Seq(("x", 1.5)).toDF("tag", "v").coalesce(1).write.mode("overwrite")
+      .parquet(s"$dir/region.parquet")
+    assert(Tables(spark, dir, "region").schema == stock(dir, "region").schema)
+    assert(Tables(spark, dir, "region").columns.toSeq == Seq("tag", "v"))
+  }
+
+  test("schema cache: nanosAsLong is part of the key") {
+    val dir = writeNanos()
+    def outcome(df: => DataFrame): Either[Class[_], StructType] =
+      Try(df.schema).toEither.left.map(_.getClass)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val asLong = try {
+      assertCachedRead(dir, "events")
+      Tables(spark, dir, "events").schema
+    } finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    assert(asLong("ts").dataType == LongType)
+    val unset = outcome(Tables(spark, dir, "events"))
+    assert(unset == outcome(stock(dir, "events")),
+      "with the flag unset a read behaves as a stock read")
+    assert(unset != Right(asLong), "the schema cached under the flag was served")
+  }
+
+  test("schema cache: a missing path fails with a stock read's error") {
+    val dir = Files.createTempDirectory("graft-tables-missing").toString
+    val ours = intercept[AnalysisException](Tables(spark, dir, "absent"))
+    val theirs = intercept[AnalysisException](stock(dir, "absent"))
+    assert(ours.getClass == theirs.getClass)
+    assert(ours.getCondition == theirs.getCondition)
+    assert(ours.getMessage == theirs.getMessage)
+  }
+
+  test("schema cache: two reads of one table are two relations, self-joinable") {
+    val dir = writePlain()
+    Tables(spark, dir, "nation")
+    def selfJoin(a: DataFrame, b: DataFrame): Seq[String] =
+      sorted(a.join(b, a("n_regionkey") === b("n_regionkey"))
+        .select(a("n_name"), b("n_name")))
+    val a = Tables(spark, dir, "nation")
+    val b = Tables(spark, dir, "nation")
+    val ids = Seq(a, b).map(_.queryExecution.analyzed.output.map(_.exprId).toSet)
+    assert(ids(0).intersect(ids(1)).isEmpty, "the two reads share attribute ids")
+    val want = selfJoin(stock(dir, "nation"), stock(dir, "nation"))
+    assert(selfJoin(a, b) == want)
+    assert(want.length == 5)
+  }
+
+  test("a second build of q2_analysis_join at sf0.001 starts no Spark job") {
+    val q2 = SparkEntry.queries("q2_analysis_join")
+    q2(spark, "/root/testdata/sf0.001")
+    val (_, jobs) = Jobs.counted(spark)(q2(spark, "/root/testdata/sf0.001"))
+    assert(jobs == 0, s"the second build started $jobs jobs")
   }
 }
