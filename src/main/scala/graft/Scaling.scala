@@ -5,9 +5,9 @@ package graft
   * (q137/q141 both read under 1.1s at sf0.1 while hiding single-task
   * windows), but the RATIO of per-query time across a 10× data step
   * can. Times the whole registered suite at sf0.01 AND sf0.1
-  * (Bench methodology: noop sink, warm-up pass, min-of-2, canary),
-  * emits per-query ratios, and flags queries whose ratio exceeds
-  * 2× the suite median — super-linear suspects for BASELINE.md
+  * ([[Measure]]'s warm-up pass and min-of-2 noop runs, plus Bench's
+  * canary), emits per-query ratios, and flags queries whose ratio
+  * exceeds 2× the suite median — super-linear suspects for BASELINE.md
   * adjudication. Writes SCALING.json (env SPARK_GRAFT_SCALING_OUT).
   *
   * Reading the numbers: most of the suite is sub-second and
@@ -21,33 +21,13 @@ object Scaling {
   def main(args: Array[String]): Unit = {
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")
     val bigDir = sys.env.getOrElse("SPARK_GRAFT_SF_BIG", "/root/testdata/sf0.1")
-    val warmDir = "/root/testdata/sf0.001"
     val spark = Engine.session()
-    def run(dir: String, name: String): Boolean =
-      try {
-        SparkEntry.queries(name)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-        true
-      } catch { case scala.util.control.NonFatal(_) => false }
-      finally {
-        // Bench's isolation rule (r14): unpinned localCheckpoint
-        // blocks otherwise accumulate across the 2×256-query pass
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
-    def time(dir: String, name: String): Double = {
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = run(dir, name)
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0
-    }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    names.foreach(run(warmDir, _))
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    Measure.warmUp(spark, queries)
     Bench.canary(spark)
     val canaryPre = Bench.canary(spark)
-    val rows = names.map { n => (n, time(smallDir, n), time(bigDir, n)) }
+    val rows = queries.map { case (n, q) =>
+      (n, Measure.min(spark, n, q, smallDir), Measure.min(spark, n, q, bigDir)) }
     val canaryPost = Bench.canary(spark)
     val ratios = rows.collect { case (_, s, b) if s > 0 && b > 0 => b / s }
     val sortedR = ratios.sorted

@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each SparkEntry.queries result → parquet
+  * (one untimed [[Measure.run]] each, so a query's pinned blocks are
+  * freed before the next), plus oracle_sql.json, for the driver's
+  * DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -26,12 +27,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Measure.run(spark, name, fn, sfDir,
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+          .failed.foreach(e =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}"))
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
