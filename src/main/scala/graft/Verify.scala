@@ -1,9 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet
-  * (one untimed [[Measure.run]] each, so a query's pinned blocks are
-  * freed before the next), plus oracle_sql.json, for the driver's
-  * DuckDB compare. */
+  * (one [[Measure.run]] each, its reading discarded, so a query's pinned
+  * blocks are freed before the next), plus oracle_sql.json, for the
+  * driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))

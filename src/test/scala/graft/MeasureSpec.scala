@@ -4,12 +4,13 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The measurement core the mains share, on small fake query functions
-  * over in-memory frames: failure capture, isolation, min-of-N and the
+  * over in-memory frames: failure capture, isolation, min-of-2 and the
   * job description. */
 class MeasureSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session()
@@ -27,6 +28,13 @@ class MeasureSpec extends AnyFunSuite {
     assert(Measure.time(spark, "next", small, dir) >= 0)
   }
 
+  test("a StackOverflowError is a failed run and the next query still runs") {
+    val deep: Measure.Query = (_, _) => throw new StackOverflowError("deep plan")
+    assert(Measure.run(spark, "deep", deep, dir).failed.get.isInstanceOf[StackOverflowError])
+    assert(Measure.min(spark, "deep", deep, dir) == -1.0)
+    assert(Measure.time(spark, "next", small, dir) >= 0)
+  }
+
   test("a fatal error from the query function propagates") {
     val oom: Measure.Query = (_, _) => throw new OutOfMemoryError("fake")
     spark.sparkContext.setJobDescription("caller")
@@ -39,6 +47,8 @@ class MeasureSpec extends AnyFunSuite {
 
   test("no persistent RDD outlives a query that localCheckpoints") {
     val sc = spark.sparkContext
+    val log = LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+    val level = log.getLevel
     def pinned(fail: Boolean): Measure.Query = (s, _) => {
       val df = s.range(1000).toDF("id").localCheckpoint()
       assert(sc.getPersistentRDDs.nonEmpty)
@@ -49,9 +59,10 @@ class MeasureSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.isEmpty)
     assert(Measure.time(spark, "pinned_failed", pinned(fail = true), dir) == -1.0)
     assert(sc.getPersistentRDDs.isEmpty)
+    assert(log.getLevel == level, "the unpersist warning's logger level is put back")
   }
 
-  test("min-of-N ignores failed runs and reads -1 when every run fails") {
+  test("min-of-2 ignores failed runs and reads -1 when every run fails") {
     var calls = 0
     val firstFails: Measure.Query = (s, d) => {
       calls += 1
@@ -59,7 +70,7 @@ class MeasureSpec extends AnyFunSuite {
     }
     assert(Measure.min(spark, "flaky", firstFails, dir) >= 0)
     assert(calls == 2)
-    assert(Measure.min(spark, "dead", failing("always"), dir, n = 3) == -1.0)
+    assert(Measure.min(spark, "dead", failing("always"), dir) == -1.0)
     assert(Measure.best(Seq(-1.0, 0.5, 0.25)) == 0.25)
     assert(Measure.best(Seq(-1.0, -1.0)) == -1.0)
     assert(Measure.best(Nil) == -1.0)
